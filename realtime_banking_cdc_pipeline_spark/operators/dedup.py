@@ -29,7 +29,6 @@ def dedup_latest(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str | Column],
-    keep_order_col: bool = False,
 ) -> DataFrame:
     """Keep the newest row per key.
 

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..operators.incremental import incremental_merge
 
 
-def build_dim(snapshot: DataFrame, key_alias: str | None = None) -> DataFrame:
+def build_dim(snapshot: DataFrame) -> DataFrame:
     """SCD2 snapshot → dim with effective_from/to + is_current (C2/P6)."""
     out = (
         snapshot.withColumnRenamed("valid_from", "effective_from")
@@ -40,7 +40,6 @@ def build_fact_transactions(
     stg_txns: DataFrame,
     accounts_dim: DataFrame,
     existing_fact: DataFrame | None = None,
-    keep_audit: bool = False,
 ) -> DataFrame:
     """fact_transactions.sql:3-15 + incremental merge (C3).
 
@@ -52,10 +51,9 @@ def build_fact_transactions(
 
     Output schema per FIXTURES.md §3: transaction_id, account_id,
     customer_id, amount, related_account_id, status, transaction_type,
-    transaction_time, load_timestamp. ``keep_audit=True`` additionally
-    keeps (ts_ms, lsn) so later batches can recency-compare on merge —
-    the durable/state copy wants them, the presented gold view drops
-    them.
+    transaction_time, load_timestamp, plus the (ts_ms, lsn) audit
+    columns later batches recency-compare on merge — the durable/state
+    copy keeps them, the presented gold view drops them.
     """
     accts = F.broadcast(accounts_dim.select("account_id", "customer_id"))
     fact = stg_txns.join(accts, "account_id", "left").select(
@@ -71,10 +69,9 @@ def build_fact_transactions(
         "lsn",
         F.current_timestamp().alias("load_timestamp"),
     )
-    merged = incremental_merge(
+    return incremental_merge(
         existing_fact,
         fact,
         unique_key="transaction_id",
         order_by=["transaction_time", "ts_ms", "lsn"],
     )
-    return merged if keep_audit else merged.drop("ts_ms", "lsn")

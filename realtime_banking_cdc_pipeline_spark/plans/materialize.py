@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.incremental import incremental_merge
-from ..sources.parquet_io import swap_into_place
+from ..sources.parquet_io import _fs, write_staged
 
 
 def materialize_view(df: DataFrame, name: str) -> None:
@@ -29,46 +29,24 @@ def materialize_view(df: DataFrame, name: str) -> None:
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Hadoop-FS existence check — works for any scheme (file/hdfs/s3a),
     unlike os.path.exists."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     return fs.exists(hpath)
-
-
-def fs_delete(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
 
 
 def materialize_table(
     df: DataFrame,
     path: str,
     partition_cols: list[str] | None = None,
-    via_staging: bool = False,
 ) -> None:
-    """``via_staging=True`` writes the new table to a staging dir (a
-    DataFrame whose lineage READS ``path`` cannot overwrite it in place)
-    then promotes it with the rename-based ``swap_into_place`` — the
-    previous table is retired to ``<path>__old`` and deleted only after
-    the new one is in place, so a crash never leaves the path truncated
-    (``recover_swap(path)`` repairs the brief both-copies-on-disk
-    window). A transactional format (Delta/Iceberg) is the upgrade —
-    that's the connector-mode path."""
-    if via_staging:
-        spark = df.sparkSession
-        tmp = path.rstrip("/") + "__staging"
-        w = df.write.mode("overwrite")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
-        w.parquet(tmp)
-        swap_into_place(spark, tmp, path)
-        return
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
+    """Staged write (``parquet_io.write_staged``): the new table lands
+    in a staging dir and is promoted with the rename-based
+    ``swap_into_place`` — the previous table is retired to
+    ``<path>__old`` and deleted only after the new one is in place, so
+    a crash never leaves the path truncated (``recover_swap(path)``
+    repairs the brief both-copies-on-disk window). A transactional
+    format (Delta/Iceberg) is the upgrade — that's the connector-mode
+    path."""
+    write_staged(df, path, partition_cols)
 
 
 def materialize_incremental(
@@ -79,15 +57,13 @@ def materialize_incremental(
     order_by: list[str] | None = None,
 ) -> DataFrame:
     """First run CTAS, then merge-on-unique-key — dbt incremental
-    semantics on plain parquet (idempotent under redelivery). Same
-    staging write + rename swap as ``materialize_table``."""
+    semantics on plain parquet (idempotent under redelivery), written
+    through the same staged swap as ``materialize_table``."""
     target = None
     if fs_exists(spark, path):
         target = spark.read.parquet(path)
     merged = incremental_merge(target, batch, unique_key, order_by=order_by or [])
-    tmp = path.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    swap_into_place(spark, tmp, path)
+    write_staged(merged, path)
     return spark.read.parquet(path)
 
 

@@ -44,19 +44,17 @@ class MedallionState:
         return cls(snapshots={"customers": None, "accounts": None}, fact=None)
 
     def save(self, base_dir: str) -> None:
-        """Persist fact + snapshots (staging double-write: the loaded
+        """Persist fact + snapshots (staged writes: the loaded
         DataFrames' lineage reads these same paths). The fact saves
         FIRST — its lineage joins the accounts snapshot, whose cached
         file listing dies the moment snapshot_accounts is overwritten."""
         from .materialize import materialize_table
 
         if self.fact is not None:
-            materialize_table(self.fact, f"{base_dir}/fact_state", via_staging=True)
+            materialize_table(self.fact, f"{base_dir}/fact_state")
         for table, snap in self.snapshots.items():
             if snap is not None:
-                materialize_table(
-                    snap, f"{base_dir}/snapshot_{table}", via_staging=True
-                )
+                materialize_table(snap, f"{base_dir}/snapshot_{table}")
 
     @classmethod
     def load(cls, spark: SparkSession, base_dir: str) -> "MedallionState":
@@ -142,17 +140,11 @@ def run_gold(
     # SCD2 rows), not this batch's staged accounts: a transaction whose
     # account CDC image arrived in an earlier batch must still resolve
     # customer_id (fact_transactions.sql joins the full staging table).
-    acct_snap = state.snapshots["accounts"]
-    accounts_dim = (
-        acct_snap.filter(F.col("valid_to").isNull())
-        if acct_snap is not None
-        else silver["accounts"]
+    accounts_dim = state.snapshots["accounts"].filter(
+        F.col("valid_to").isNull()
     )
     state.fact = build_fact_transactions(
-        silver["transactions"],
-        accounts_dim,
-        existing_fact=state.fact,
-        keep_audit=True,
+        silver["transactions"], accounts_dim, existing_fact=state.fact
     )
     # presented fact drops the (ts_ms, lsn) audit cols; the state copy
     # keeps them so later batches can recency-compare on merge

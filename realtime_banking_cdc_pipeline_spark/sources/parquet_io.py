@@ -53,23 +53,35 @@ def compact_parquet(
     """Rewrite a parquet table into ⌈rows / target⌉ evenly-sized files —
     the maintenance pass every incremental sink needs (per-batch appends
     accumulate small files; small files mean per-file open/footer costs
-    dominate scans and executors starve on tiny splits). Writes to a
-    staging dir (the read and the rewrite share ``path``), then promotes
-    it with the rename-based ``swap_into_place``. Returns the resulting
-    file count. On Delta/Iceberg this is OPTIMIZE; here it is the same
-    operation on plain parquet."""
+    dominate scans and executors starve on tiny splits). The read and
+    the rewrite share ``path``, so it goes through ``write_staged``.
+    Returns the resulting file count. On Delta/Iceberg this is
+    OPTIMIZE; here it is the same operation on plain parquet."""
     df = spark.read.parquet(path)
     n = df.count()
     files = max(1, -(-n // target_records_per_file))
-    tmp = path.rstrip("/") + "__staging"
-    df.repartition(files).write.mode("overwrite").parquet(tmp)
-    swap_into_place(spark, tmp, path)
+    write_staged(df.repartition(files), path)
     return files
 
 
 def _fs(spark: SparkSession, path: str):
     hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def write_staged(
+    df: DataFrame, path: str, partition_cols: list[str] | None = None
+) -> None:
+    """The one way a durable table is (re)written: write ``df`` to
+    ``<path>__staging``, then promote it with ``swap_into_place``. A
+    frame whose lineage READS ``path`` cannot overwrite it in place,
+    and an in-place overwrite truncates the target if it crashes."""
+    staging = path.rstrip("/") + "__staging"
+    w = df.write.mode("overwrite")
+    if partition_cols:
+        w = w.partitionBy(*partition_cols)
+    w.parquet(staging)
+    swap_into_place(df.sparkSession, staging, path)
 
 
 def swap_into_place(spark: SparkSession, staging: str, path: str) -> None:
@@ -128,13 +140,6 @@ def recover_swap(spark: SparkSession, path: str) -> str:
         fs.delete(hstaging, True)
         return "restored_old"
     return "missing"
-
-
-def _delete_path(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
 
 
 SUPPORTED_FORMATS = ("parquet", "orc", "json", "csv")

@@ -38,7 +38,7 @@ mechanisms deliver that:
   accumulated BATCH partitions fold into a fresh base partition
   ``epoch=-<e>`` (never a source of the fold, so history stays on
   disk until the new base commits — the same crash-safe shape as
-  streaming/metrics.py). Older bases are immutable generations: a
+  streaming/epoch_store.py). Older bases are immutable generations: a
   fold costs rows-since-last-compaction, not the whole store (the r8
   full fold rewrote all history — 45.7 s at epoch 16 of the 2M probe,
   3-4x steady state). With retention, expired generations retire as
@@ -75,6 +75,7 @@ from ..functions.similarity import (
     MINHASH_PERMS,
     minhash_signature,
 )
+from .epoch_store import committed_bases, epoch_ids, has_parquet_files
 
 _MATCH_MIN_DEFAULT = 8  # of 16 components => est. jaccard >= 0.5
 
@@ -94,28 +95,6 @@ _BAND_BUCKETS = 64
 # tiered and keeps already-subsumed older bases (permanent duplicates).
 # Leading underscore => ignored by Spark's parquet reader, like _SUCCESS.
 _CONSOLIDATED_MARKER = "_CONSOLIDATED"
-
-
-def _epoch_ids(path: str) -> list[int]:
-    """Epoch partition ids present on disk ([] for flat stores)."""
-    if not os.path.exists(path):
-        return []
-    return [
-        int(name.split("=", 1)[1])
-        for name in os.listdir(path)
-        if name.startswith("epoch=")
-    ]
-
-
-def _has_parquet_files(part_dir: str) -> bool:
-    """True iff the partition directory holds at least one parquet data
-    file (possibly nested one level, e.g. bucket=N subdirs). A rowless
-    write leaves only _SUCCESS — readable via a root scan, but an
-    explicit per-partition read cannot infer its schema."""
-    for base, _dirs, files in os.walk(part_dir):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
 
 
 def _bk_cols(num_perm: int, bands: int) -> list[str]:
@@ -423,13 +402,13 @@ def ingest_batch(
         .distinct()
     )
     dropped = dropped_within
-    # _has_parquet_files, not exists: a store whose every epoch is
+    # has_parquet_files, not exists: a store whose every epoch is
     # rowless (the composed pipeline's exact gate can empty whole
     # batches) has nothing to gate against, and a root scan over it
     # cannot infer a schema.
-    if _has_parquet_files(store_path):
+    if has_parquet_files(store_path):
         store_banded = None
-        if banded_store_path is not None and _has_parquet_files(
+        if banded_store_path is not None and has_parquet_files(
             banded_store_path
         ):
             store_banded = _horizon_filter(
@@ -448,8 +427,8 @@ def ingest_batch(
             # store while the banded store was absent (toggled on
             # mid-stream, crash between the two compaction writes) are
             # re-banded on read so no historical candidate is missed.
-            missing = set(_epoch_ids(store_path)) - set(
-                _epoch_ids(banded_store_path)
+            missing = set(epoch_ids(store_path)) - set(
+                epoch_ids(banded_store_path)
             )
             if missing:
                 miss = spark.read.parquet(store_path)
@@ -608,16 +587,6 @@ def compact_corpus_store(
         )
 
 
-def _committed_bases(path: str) -> list[int]:
-    """Magnitudes of base partitions with a durable ``_SUCCESS``."""
-    return sorted(
-        -e
-        for e in _epoch_ids(path)
-        if e < 0
-        and os.path.exists(os.path.join(path, f"epoch={e}", "_SUCCESS"))
-    )
-
-
 def _compact_store(
     spark: SparkSession,
     path: str,
@@ -642,7 +611,7 @@ def _compact_store(
     are cleared. A base WITHOUT the marker is a crashed partial write
     (its sources are still on disk, because deletion only runs after
     commit), so it is dropped and refolded."""
-    existing = _epoch_ids(path)
+    existing = epoch_ids(path)
     if not existing:
         return
     base = os.path.join(path, f"epoch=-{int(epoch_id)}")
@@ -654,7 +623,7 @@ def _compact_store(
     # older bases whose rows the committed base -epoch_id already
     # holds, planting permanent duplicate rows in every future read and
     # fold (ADVICE r9: consolidation-replay crash window).
-    bases = [b for b in _committed_bases(path) if b < epoch_id]
+    bases = [b for b in committed_bases(path) if b < epoch_id]
     if incremental and len(bases) >= max_bases:
         # consolidation rung: too many generations — this fold merges
         # everything (amortized: once per max_bases compactions)
@@ -680,7 +649,7 @@ def _compact_store(
             )
             return
         shutil.rmtree(base, ignore_errors=True)
-        existing = _epoch_ids(path)
+        existing = epoch_ids(path)
         if not existing:
             return
     if incremental:
@@ -699,7 +668,7 @@ def _compact_store(
             e
             for e in existing
             if floor <= e < epoch_id
-            and _has_parquet_files(os.path.join(path, f"epoch={e}"))
+            and has_parquet_files(os.path.join(path, f"epoch={e}"))
         )
         if src_epochs:
             df = spark.read.option("basePath", path).parquet(
@@ -714,7 +683,7 @@ def _compact_store(
         # every batch arrived fully duplicate — fails root-scan schema
         # inference. Nothing to fold; cleanup still clears the debris.
         if any(
-            _has_parquet_files(os.path.join(path, f"epoch={e}"))
+            has_parquet_files(os.path.join(path, f"epoch={e}"))
             for e in existing
         ):
             df = spark.read.parquet(path)
@@ -771,7 +740,7 @@ def _compact_cleanup(
     write whose sources were still on disk and have now been folded),
     plus — with retention — committed bases whose newest possible row
     (magnitude - 1) has expired."""
-    for e in _epoch_ids(path):
+    for e in epoch_ids(path):
         if e == -int(epoch_id):
             continue
         if not incremental:

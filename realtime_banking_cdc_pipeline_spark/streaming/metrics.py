@@ -1,32 +1,22 @@
-"""Streaming sketch monitors: distinct counts via the deterministic
-HLL register store, heavy hitters via the Count-Min cell store,
-quantiles via the DDSketch histogram store, and a seen-set Bloom dedup
-gate (functions/sketches.py). Together the four stores demonstrate the
-exactly-once regimes by merge class — idempotent max (HLL), idempotent
-OR (Bloom), and epoch-keyed additive sums (CMS, DDSketch; see the
-section comments below).
+"""Streaming sketch and coverage monitors: distinct counts via the
+deterministic HLL register store, heavy hitters via the Count-Min cell
+store, quantiles via the DDSketch histogram store, a seen-set Bloom
+dedup gate (functions/sketches.py), and the exact and KMV vocabulary
+coverage monitors. Every store follows the committed-base epoch-store
+protocol of streaming/epoch_store.py (per-batch ``epoch=<id>``
+partitions, live-set reads, compaction into ``epoch=-<e>`` bases).
+What differs per store is its merge class — idempotent max (HLL),
+idempotent OR (Bloom), epoch-keyed additive sums (CMS, DDSketch),
+distinct / bottom-k unions (coverage, KMV) — and the compaction
+horizon that class needs; the section comments below give each
+store's reason.
 
-Unlike the signature/gram stores (corpus.py, substr.py), the HLL
-register store needs NO epoch bookkeeping for exactly-once CORRECTNESS:
-max-merge is idempotent, so a replayed batch folds to the identical
-store. Epoch partitioning here exists for CRASH SAFETY instead: each
-micro-batch writes ONLY its own ``epoch=<id>`` partition, so no write
-ever clears accumulated history — a driver/executor failure mid-write
-can at worst lose the in-flight batch's partition, which the replayed
-batch rewrites identically. (The previous whole-store ``overwrite``
-cleared the target directory while the merged frame lived only in
-executor localCheckpoint blocks; a crash there lost every register.)
-
-The fold happens on READ (``read_hll_store``), and periodic compaction
-keeps the partition count bounded: the fold of all partitions is
-written to a fresh ``epoch=-<e>`` base partition (never a source of
-the fold, so sources stay on disk untouched during the write), then
-the subsumed partitions are deleted. Every crash window re-folds to
-the same registers by idempotence of max — leftover partitions are
-cleanup debt, never corruption.
-
-State stays constant-size: at most HLL_M rows per key per partition,
-and ≤ ``compact_every`` + 1 partitions between compactions.
+The HLL register store needs NO epoch bookkeeping for exactly-once
+CORRECTNESS: max-merge is idempotent, so a replayed batch folds to the
+identical store. Its epoch partitioning exists for CRASH SAFETY
+instead. (The previous whole-store ``overwrite`` cleared the target
+directory while the merged frame lived only in executor
+localCheckpoint blocks; a crash there lost every register.)
 
 Reference analog: the reference has no incremental distinct counts at
 all — its dashboards re-aggregate marts (`models/gold/*.sql`); this is
@@ -35,13 +25,12 @@ the training-data-pipeline monitoring extension.
 
 from __future__ import annotations
 
-import os
-import shutil
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import CheckpointScope
 from ..functions.sketches import (
     bloom_fill_stats,
     bloom_maybe_member,
@@ -56,12 +45,50 @@ from ..functions.sketches import (
     merge_dds_bins,
     merge_hll_registers,
 )
+from .epoch_store import (
+    compact,
+    compaction_due,
+    has_parquet_files,
+    part_path,
+    read_live,
+)
 
 
 class BloomSaturationWarning(UserWarning):
     """The Bloom gate's probed filter has saturated past the caller's
     threshold — a downstream ``maybe_seen`` filter is now silently
     dropping fresh text at the reported estimated-fp rate."""
+
+
+def _start_file_monitor(
+    spark: SparkSession,
+    src_path: str,
+    checkpoint: str,
+    schema,
+    max_files_per_trigger: int,
+    batch_fn,
+    out_path: str | None = None,
+):
+    """The file-source runner every monitor shares: each JSON
+    micro-batch runs ``batch_fn(batch_df, epoch)``; with ``out_path``
+    the returned frame lands in that epoch's own partition (replay
+    overwrites it). availableNow drains then stops (test mode); drop
+    the trigger for a continuous monitor."""
+
+    def on_batch(batch_df: DataFrame, epoch: int) -> None:
+        out = batch_fn(batch_df, epoch)
+        if out_path is not None:
+            out.write.mode("overwrite").parquet(part_path(out_path, epoch))
+
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .json(src_path)
+        .writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def read_hll_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -73,59 +100,17 @@ def read_hll_store(spark: SparkSession, store_path: str) -> DataFrame:
     return merge_hll_registers(store)
 
 
-def _epoch_ids(store_path: str) -> list[int]:
-    return [
-        int(name.split("=", 1)[1])
-        for name in os.listdir(store_path)
-        if name.startswith("epoch=")
-    ]
-
-
 def compact_hll_store(
     spark: SparkSession, store_path: str, epoch_id: int
 ) -> None:
-    """Fold all current partitions into the fresh base partition
-    ``epoch=-<epoch_id>`` and delete the subsumed ones.
-
-    Crash-safe by construction: the write target is never one of the
-    fold's sources (batch partitions are ≥ 0, earlier bases are
-    ``-e'`` with ``e' < epoch_id``), so sources remain on disk until
-    the new base is fully committed; any partition left behind by a
-    crash mid-delete re-folds idempotently and is removed by the next
-    compaction.
-
-    A REPLAYED compaction epoch does NOT rewrite the base — that would
-    make ``epoch=-<epoch_id>`` both a fold source and the overwrite
-    target, re-opening the clear-then-crash register-loss window this
-    layout exists to close. A base with a ``_SUCCESS`` marker is
-    durable: only leftover source partitions are cleared. A base
-    WITHOUT the marker is a crashed partial write (sources still on
-    disk — deletion only runs after commit), so it is dropped and
-    refolded.
-    """
-    if epoch_id <= 0:
-        raise ValueError("compaction epoch must be positive")
-    existing = _epoch_ids(store_path)
-    base = os.path.join(store_path, f"epoch=-{int(epoch_id)}")
-    if os.path.exists(base):
-        if os.path.exists(os.path.join(base, "_SUCCESS")):
-            for e in existing:
-                if e != -int(epoch_id):
-                    shutil.rmtree(
-                        os.path.join(store_path, f"epoch={e}"),
-                        ignore_errors=True,
-                    )
-            return
-        shutil.rmtree(base, ignore_errors=True)
-    folded = read_hll_store(spark, store_path).localCheckpoint(eager=True)
-    folded.write.mode("overwrite").parquet(
-        os.path.join(store_path, f"epoch=-{int(epoch_id)}")
+    """Fold all current partitions, the triggering epoch included, into
+    the base ``epoch=-<epoch_id>`` and delete the subsumed ones. Only
+    HLL may fold everything: max-merge is idempotent, so a replay of
+    ``epoch_id`` re-folds to the identical registers."""
+    compact(
+        spark, store_path, epoch_id, merge_hll_registers,
+        horizon=epoch_id + 1,
     )
-    for e in existing:
-        if e != -int(epoch_id):
-            shutil.rmtree(
-                os.path.join(store_path, f"epoch={e}"), ignore_errors=True
-            )
 
 
 def update_hll_store(
@@ -146,9 +131,9 @@ def update_hll_store(
         hll_registers(batch_df, key_col, value_col)
     )
     batch_regs.write.mode("overwrite").parquet(
-        os.path.join(store_path, f"epoch={int(epoch_id)}")
+        part_path(store_path, epoch_id)
     )
-    if compact_every and epoch_id > 0 and epoch_id % compact_every == 0:
+    if compaction_due(epoch_id, compact_every):
         compact_hll_store(spark, store_path, epoch_id)
     return read_hll_store(spark, store_path)
 
@@ -164,31 +149,14 @@ def start_distinct_monitor(
     max_files_per_trigger: int = 1,
     compact_every: int = 16,
 ):
-    """File-source streaming wrapper: every micro-batch folds into the
-    HLL register store (own epoch partition; compacted every
-    ``compact_every`` batches). availableNow drains then stops (test
-    mode); drop the trigger for a continuous monitor."""
-
-    def on_batch(batch_df: DataFrame, epoch: int) -> None:
-        update_hll_store(
-            batch_df,
-            store_path,
-            key_col,
-            value_col,
-            epoch_id=epoch,
-            compact_every=compact_every,
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .json(src_path)
-    )
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Every micro-batch folds into the HLL register store (own epoch
+    partition; compacted every ``compact_every`` batches)."""
+    return _start_file_monitor(
+        spark, src_path, checkpoint, schema, max_files_per_trigger,
+        lambda batch_df, epoch: update_hll_store(
+            batch_df, store_path, key_col, value_col,
+            epoch_id=epoch, compact_every=compact_every,
+        ),
     )
 
 
@@ -202,14 +170,11 @@ def start_distinct_monitor(
 # Replay safety here comes from the epoch layout itself — each batch
 # OVERWRITES its own ``epoch=<id>`` partition with deterministically
 # identical cells, so at-least-once delivery folds to the same sums.
-#
-# The additive twist bites compaction too: after a fold commits, a
-# crash mid-delete leaves subsumed source partitions next to the base,
-# and a naive sum-on-read would count them twice. Reads therefore apply
-# BASE SUBSUMPTION: the newest committed base ``epoch=-b`` wins, and
-# every partition older than ``b`` (earlier bases, batch epochs < b)
-# is ignored — leftover partitions are cleanup debt, never double
-# counts. (HLL never needed this; max over duplicates is a no-op.)
+# The additive twist is why reads go through the epoch store's live
+# set (base subsumption): a crash mid-compaction leaves subsumed source
+# partitions next to the committed base, and a naive sum-on-read would
+# count them twice. (HLL never needed this; max over duplicates is a
+# no-op.)
 #
 # Heavy-hitter candidates: a CMS alone cannot enumerate its heavy
 # hitters, so each batch also records its own exact top
@@ -221,41 +186,17 @@ def start_distinct_monitor(
 # estimate >= true-count guarantee.
 
 
-def _cms_live(spark: SparkSession, store_path: str) -> DataFrame:
-    """The store's live partitions under base subsumption: the newest
-    COMMITTED base plus batch epochs >= its magnitude. Uncommitted
-    (partial-write) bases and subsumed older partitions are excluded —
-    additive state would double-count them where HLL's max shrugged."""
-    df = spark.read.parquet(store_path)
-    if "epoch" not in df.columns:
-        return df
-    bases = [
-        -e for e in _epoch_ids(store_path)
-        if e < 0 and os.path.exists(
-            os.path.join(store_path, f"epoch={e}", "_SUCCESS")
-        )
-    ]
-    if bases:
-        b = max(bases)
-        df = df.filter(
-            (F.col("epoch") == -b) | (F.col("epoch") >= b)
-        )
-    else:
-        df = df.filter(F.col("epoch") >= 0)
-    return df.drop("epoch")
-
-
 def read_cms_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the live partitions into one (row_idx, col_idx, cnt) cell
     table — the sketch's logical value."""
-    return merge_cms_cells(_cms_live(spark, store_path))
+    return merge_cms_cells(read_live(spark, store_path))
 
 
 def read_cms_hitters(spark: SparkSession, store_path: str) -> DataFrame:
     """(term, cms_estimate) for every tracked candidate, estimates
     from the folded cells (min over CMS_D probed counters)."""
     cells = read_cms_store(spark, store_path)
-    cand = _cms_live(spark, store_path + "_cand").select("term").distinct()
+    cand = read_live(spark, store_path + "_cand").select("term").distinct()
     return cms_estimates(cells, cand)
 
 
@@ -267,67 +208,13 @@ def compact_cms_store(
     delete the subsumed ones. Strictly-earlier (unlike the HLL fold of
     everything) because a replay of ``epoch_id`` itself must still be
     able to overwrite its own partition without its counts having been
-    baked into a base. Same replay guard as the other epoch stores: a
-    committed base is never rewritten, a partial one (no _SUCCESS —
-    sources still on disk) is dropped and refolded."""
-    if epoch_id <= 0:
-        raise ValueError("compaction epoch must be positive")
-    for path, fold_fn in (
-        (store_path, merge_cms_cells),
-        (store_path + "_cand", lambda df: df.select("term").distinct()),
-    ):
-        if not os.path.exists(path):
-            continue
-        existing = _epoch_ids(path)
-        if not existing:
-            continue
-        base = os.path.join(path, f"epoch=-{int(epoch_id)}")
-        if os.path.exists(base):
-            if os.path.exists(os.path.join(base, "_SUCCESS")):
-                for e in existing:
-                    if e < epoch_id and e != -int(epoch_id):
-                        shutil.rmtree(
-                            os.path.join(path, f"epoch={e}"),
-                            ignore_errors=True,
-                        )
-                continue
-            shutil.rmtree(base, ignore_errors=True)
-        folded = fold_fn(
-            _cms_live_before(spark, path, epoch_id)
-        ).localCheckpoint(eager=True)
-        folded.write.mode("overwrite").parquet(base)
-        for e in _epoch_ids(path):
-            if e < epoch_id and e != -int(epoch_id):
-                shutil.rmtree(
-                    os.path.join(path, f"epoch={e}"), ignore_errors=True
-                )
-
-
-def _cms_live_before(
-    spark: SparkSession, store_path: str, epoch_id: int
-) -> DataFrame:
-    """Live partitions (base subsumption) restricted to epochs strictly
-    earlier than ``epoch_id`` — the compaction fold's source set."""
-    df = spark.read.parquet(store_path)
-    if "epoch" not in df.columns:
-        return df
-    bases = [
-        -e for e in _epoch_ids(store_path)
-        if e < 0 and os.path.exists(
-            os.path.join(store_path, f"epoch={e}", "_SUCCESS")
-        )
-    ]
-    if bases:
-        b = max(bases)
-        df = df.filter(
-            (F.col("epoch") == -b)
-            | ((F.col("epoch") >= b) & (F.col("epoch") < epoch_id))
-        )
-    else:
-        df = df.filter(
-            (F.col("epoch") >= 0) & (F.col("epoch") < epoch_id)
-        )
-    return df.drop("epoch")
+    baked into a base."""
+    compact(spark, store_path, epoch_id, merge_cms_cells, horizon=epoch_id)
+    compact(
+        spark, store_path + "_cand", epoch_id,
+        lambda df: df.select("term").distinct(),
+        horizon=epoch_id,
+    )
 
 
 def update_cms_store(
@@ -343,23 +230,23 @@ def update_cms_store(
     exactly-once despite the additive state) and record the batch's
     exact top candidates; returns the folded heavy-hitter estimates."""
     spark = batch_df.sparkSession
-    counts = (
-        batch_df.select(F.col(term_col).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    ).localCheckpoint(eager=True)
-    cms_cells(counts, "term", "n").write.mode("overwrite").parquet(
-        os.path.join(store_path, f"epoch={int(epoch_id)}")
-    )
-    cand_path = store_path + "_cand"
-    (
-        counts.orderBy(F.col("n").desc(), F.col("term").asc())
-        .limit(candidates_per_batch)
-        .select("term")
-        .write.mode("overwrite")
-        .parquet(os.path.join(cand_path, f"epoch={int(epoch_id)}"))
-    )
-    if compact_every and epoch_id > 0 and epoch_id % compact_every == 0:
+    with CheckpointScope() as scope:
+        counts = scope.ckpt(
+            batch_df.select(F.col(term_col).alias("term"))
+            .groupBy("term")
+            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        )
+        cms_cells(counts, "term", "n").write.mode("overwrite").parquet(
+            part_path(store_path, epoch_id)
+        )
+        (
+            counts.orderBy(F.col("n").desc(), F.col("term").asc())
+            .limit(candidates_per_batch)
+            .select("term")
+            .write.mode("overwrite")
+            .parquet(part_path(store_path + "_cand", epoch_id))
+        )
+    if compaction_due(epoch_id, compact_every):
         compact_cms_store(spark, store_path, epoch_id)
     return read_cms_hitters(spark, store_path)
 
@@ -375,35 +262,19 @@ def start_heavy_hitters_monitor(
     compact_every: int = 16,
     candidates_per_batch: int = 32,
 ):
-    """File-source streaming wrapper: every micro-batch explodes
-    ``terms_expr`` (a SQL expression yielding an ARRAY of terms per
-    row) and folds the term stream into the Count-Min store.
-    availableNow drains then stops (test mode); drop the trigger for a
-    continuous monitor."""
-
-    def on_batch(batch_df: DataFrame, epoch: int) -> None:
-        terms = batch_df.select(
-            F.explode(F.expr(terms_expr)).alias("term")
-        )
-        update_cms_store(
-            terms,
+    """Every micro-batch explodes ``terms_expr`` (a SQL expression
+    yielding an ARRAY of terms per row) and folds the term stream into
+    the Count-Min store."""
+    return _start_file_monitor(
+        spark, src_path, checkpoint, schema, max_files_per_trigger,
+        lambda batch_df, epoch: update_cms_store(
+            batch_df.select(F.explode(F.expr(terms_expr)).alias("term")),
             store_path,
             "term",
             epoch_id=epoch,
             compact_every=compact_every,
             candidates_per_batch=candidates_per_batch,
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(src_path)
-    )
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -425,7 +296,7 @@ def start_heavy_hitters_monitor(
 def read_dds_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Fold the live partitions (base subsumption — additive state)
     into one (idx, cnt) histogram — the sketch's logical value."""
-    return merge_dds_bins(_cms_live(spark, store_path))
+    return merge_dds_bins(read_live(spark, store_path))
 
 
 def read_dds_quantiles(
@@ -440,34 +311,8 @@ def compact_dds_store(
     spark: SparkSession, store_path: str, epoch_id: int
 ) -> None:
     """Fold partitions strictly earlier than ``epoch_id`` into the
-    base ``epoch=-<epoch_id>``; same replay/crash contract as
-    compact_cms_store (committed bases never rewritten, partial bases
-    dropped and refolded, leftovers excluded by subsumption)."""
-    if epoch_id <= 0:
-        raise ValueError("compaction epoch must be positive")
-    existing = _epoch_ids(store_path)
-    if not existing:
-        return
-    base = os.path.join(store_path, f"epoch=-{int(epoch_id)}")
-    if os.path.exists(base):
-        if os.path.exists(os.path.join(base, "_SUCCESS")):
-            for e in existing:
-                if e < epoch_id and e != -int(epoch_id):
-                    shutil.rmtree(
-                        os.path.join(store_path, f"epoch={e}"),
-                        ignore_errors=True,
-                    )
-            return
-        shutil.rmtree(base, ignore_errors=True)
-    folded = merge_dds_bins(
-        _cms_live_before(spark, store_path, epoch_id)
-    ).localCheckpoint(eager=True)
-    folded.write.mode("overwrite").parquet(base)
-    for e in _epoch_ids(store_path):
-        if e < epoch_id and e != -int(epoch_id):
-            shutil.rmtree(
-                os.path.join(store_path, f"epoch={e}"), ignore_errors=True
-            )
+    base ``epoch=-<epoch_id>`` — additive bins, so the CMS horizon."""
+    compact(spark, store_path, epoch_id, merge_dds_bins, horizon=epoch_id)
 
 
 def update_dds_store(
@@ -483,9 +328,9 @@ def update_dds_store(
     state); returns the folded histogram."""
     spark = batch_df.sparkSession
     dds_bins(batch_df, value_col).write.mode("overwrite").parquet(
-        os.path.join(store_path, f"epoch={int(epoch_id)}")
+        part_path(store_path, epoch_id)
     )
-    if compact_every and epoch_id > 0 and epoch_id % compact_every == 0:
+    if compaction_due(epoch_id, compact_every):
         compact_dds_store(spark, store_path, epoch_id)
     return read_dds_store(spark, store_path)
 
@@ -500,28 +345,14 @@ def start_quantile_monitor(
     max_files_per_trigger: int = 1,
     compact_every: int = 16,
 ):
-    """File-source streaming wrapper: every micro-batch bins
-    ``value_expr`` (a SQL expression yielding a positive integer per
-    row) into the DDSketch store. availableNow drains then stops (test
-    mode); drop the trigger for a continuous monitor."""
-
-    def on_batch(batch_df: DataFrame, epoch: int) -> None:
-        vals = batch_df.select(F.expr(value_expr).alias("v"))
-        update_dds_store(
-            vals, store_path, "v", epoch_id=epoch,
-            compact_every=compact_every,
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(src_path)
-    )
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Every micro-batch bins ``value_expr`` (a SQL expression yielding
+    a positive integer per row) into the DDSketch store."""
+    return _start_file_monitor(
+        spark, src_path, checkpoint, schema, max_files_per_trigger,
+        lambda batch_df, epoch: update_dds_store(
+            batch_df.select(F.expr(value_expr).alias("v")), store_path, "v",
+            epoch_id=epoch, compact_every=compact_every,
+        ),
     )
 
 
@@ -556,9 +387,7 @@ def read_bloom_store(spark: SparkSession, store_path: str) -> DataFrame:
     the ingest-side guards exist for) folds to the EMPTY filter
     instead of crashing the read path (ADVICE r11), so
     read_bloom_health reports set_bits=0 rather than throwing."""
-    from .corpus import _has_parquet_files
-
-    if not (os.path.exists(store_path) and _has_parquet_files(store_path)):
+    if not has_parquet_files(store_path):
         return spark.createDataFrame([], "word_idx bigint, bits bigint")
     store = spark.read.parquet(store_path)
     if "epoch" in store.columns:
@@ -577,41 +406,10 @@ def compact_bloom_store(
     ``epoch < epoch_id``, and a fold-of-all base would bake the
     triggering epoch's own words into the only partition a replay of
     that epoch can probe — turning every replayed row into a
-    maybe_seen=true false flag. Committed bases are never rewritten;
-    a partial base (no _SUCCESS — sources still on disk) is dropped
-    and refolded; leftover source partitions re-OR idempotently.
-
-    Epochs BEFORE the trigger rely on the streaming commit order (the
-    same argument the CMS store makes): batch e runs only after batch
-    e-1's checkpoint committed, so once compaction-at-e has folded
-    epochs < e into the base, none of them can ever be replayed — the
-    only replayable epoch is e itself, and its words stay out of the
-    base by the strictly-earlier fold."""
-    if epoch_id <= 0:
-        raise ValueError("compaction epoch must be positive")
-    existing = _epoch_ids(store_path)
-    if not existing:
-        return
-    base = os.path.join(store_path, f"epoch=-{int(epoch_id)}")
-    if os.path.exists(base):
-        if os.path.exists(os.path.join(base, "_SUCCESS")):
-            for e in existing:
-                if e < epoch_id and e != -int(epoch_id):
-                    shutil.rmtree(
-                        os.path.join(store_path, f"epoch={e}"),
-                        ignore_errors=True,
-                    )
-            return
-        shutil.rmtree(base, ignore_errors=True)
-    folded = merge_bloom_words(
-        _cms_live_before(spark, store_path, epoch_id)
-    ).localCheckpoint(eager=True)
-    folded.write.mode("overwrite").parquet(base)
-    for e in _epoch_ids(store_path):
-        if e < epoch_id and e != -int(epoch_id):
-            shutil.rmtree(
-                os.path.join(store_path, f"epoch={e}"), ignore_errors=True
-            )
+    maybe_seen=true false flag. Epochs before the trigger can never be
+    replayed once folded (streaming commit order), so their words in
+    the base are safe."""
+    compact(spark, store_path, epoch_id, merge_bloom_words, horizon=epoch_id)
 
 
 def bloom_gate_batch(
@@ -651,15 +449,14 @@ def bloom_gate_batch(
     bits = BLOOM_BITS if bits is None else bits
     k = BLOOM_K if k is None else k
     spark = batch_df.sparkSession
-    from .corpus import _has_parquet_files
-
-    if os.path.exists(store_path) and _has_parquet_files(store_path):
+    scope = CheckpointScope()
+    if has_parquet_files(store_path):
         # materialize the store fold ONCE — both the health aggregate
         # and the membership probe read it (ADVICE r11: unpersisted,
         # the full store read + OR-fold ran twice per micro-batch)
-        words = merge_bloom_words(
-            _cms_live_before(spark, store_path, epoch_id)
-        ).localCheckpoint(eager=True)
+        words = scope.ckpt(
+            merge_bloom_words(read_live(spark, store_path, before=epoch_id))
+        )
     else:
         words = spark.createDataFrame([], "word_idx bigint, bits bigint")
     health = bloom_fill_stats(words, bits=bits, k=k).first()
@@ -680,10 +477,11 @@ def bloom_gate_batch(
         .withColumn("bloom_est_fp", F.lit(float(health.est_fp)))
         .localCheckpoint(eager=True)
     )
+    scope.release()  # flags materialized: nothing reads words any more
     bloom_words(batch_df, text_col, bits=bits, k=k).write.mode(
         "overwrite"
-    ).parquet(os.path.join(store_path, f"epoch={int(epoch_id)}"))
-    if compact_every and epoch_id > 0 and epoch_id % compact_every == 0:
+    ).parquet(part_path(store_path, epoch_id))
+    if compaction_due(epoch_id, compact_every):
         compact_bloom_store(spark, store_path, epoch_id)
     return flags
 
@@ -700,30 +498,15 @@ def start_bloom_dedup_gate(
     max_files_per_trigger: int = 1,
     compact_every: int = 16,
 ):
-    """File-source streaming wrapper: every micro-batch is gated
-    against the seen-set Bloom store and its (id, maybe_seen) verdicts
-    land in ``out_path`` under the batch's own epoch partition (replay
-    overwrites it). availableNow drains then stops (test mode)."""
-
-    def on_batch(batch_df: DataFrame, epoch: int) -> None:
-        flags = bloom_gate_batch(
+    """Every micro-batch is gated against the seen-set Bloom store and
+    its (id, maybe_seen) verdicts land in ``out_path``."""
+    return _start_file_monitor(
+        spark, src_path, checkpoint, schema, max_files_per_trigger,
+        lambda batch_df, epoch: bloom_gate_batch(
             batch_df, store_path, id_col, text_col,
             epoch_id=epoch, compact_every=compact_every,
-        )
-        flags.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"epoch={int(epoch)}")
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(src_path)
-    )
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        out_path=out_path,
     )
 
 
@@ -845,9 +628,7 @@ def coverage_monitor_batch(
     earlier epochs; the batch side is checkpointed once and the
     checkpoints are scope-released before return (r13 ADVICE — no
     ContextCleaner debt in a long-running stream)."""
-    from ..caching import CheckpointScope
     from ..functions.similarity import exploded_shingles
-    from .corpus import _has_parquet_files
 
     scope = CheckpointScope()
     spark = batch_df.sparkSession
@@ -871,8 +652,8 @@ def coverage_monitor_batch(
         .distinct()
     )
     dg = scope.ckpt(dg)
-    if os.path.exists(store_path) and _has_parquet_files(store_path):
-        earlier = _cms_live_before(spark, store_path, epoch_id)
+    if has_parquet_files(store_path):
+        earlier = read_live(spark, store_path, before=epoch_id)
         vocab_before = earlier.count()
         fresh = scope.ckpt(dg.join(earlier, "dg", "left_anti"))
     else:
@@ -880,11 +661,9 @@ def coverage_monitor_batch(
         fresh = dg
     n_sh = dg.count()
     n_new = fresh.count()
-    fresh.write.mode("overwrite").parquet(
-        os.path.join(store_path, f"epoch={int(epoch_id)}")
-    )
+    fresh.write.mode("overwrite").parquet(part_path(store_path, epoch_id))
     scope.release()  # dg/fresh fully consumed (counts + store write)
-    if compact_every and epoch_id > 0 and epoch_id % compact_every == 0:
+    if compaction_due(epoch_id, compact_every):
         compact_coverage_store(spark, store_path, epoch_id)
     return spark.createDataFrame(
         [
@@ -907,54 +686,25 @@ def compact_coverage_store(
     """Fold partitions STRICTLY EARLIER than ``epoch_id`` into the base
     ``epoch=-<epoch_id>`` and delete the subsumed ones. Epoch
     partitions are disjoint digest sets, so the fold is a distinct
-    union — idempotent over crash leftovers (a leftover source
-    partition re-folds to the same set). Committed bases are never
-    rewritten; a partial base (no _SUCCESS) is dropped and refolded."""
-    if epoch_id <= 0:
-        raise ValueError("compaction epoch must be positive")
-    existing = _epoch_ids(store_path)
-    if not existing:
-        return
-    base = os.path.join(store_path, f"epoch=-{int(epoch_id)}")
-    if os.path.exists(base):
-        if os.path.exists(os.path.join(base, "_SUCCESS")):
-            for e in existing:
-                if e < epoch_id and e != -int(epoch_id):
-                    shutil.rmtree(
-                        os.path.join(store_path, f"epoch={e}"),
-                        ignore_errors=True,
-                    )
-            return
-        shutil.rmtree(base, ignore_errors=True)
-    from ..caching import CheckpointScope
-
-    with CheckpointScope() as scope:
-        folded = scope.ckpt(
-            _cms_live_before(spark, store_path, epoch_id)
-            .select("dg")
-            .distinct()
-        )
-        folded.write.mode("overwrite").parquet(base)
-    for e in _epoch_ids(store_path):
-        if e < epoch_id and e != -int(epoch_id):
-            shutil.rmtree(
-                os.path.join(store_path, f"epoch={e}"), ignore_errors=True
-            )
+    union — idempotent over crash leftovers."""
+    compact(
+        spark, store_path, epoch_id,
+        lambda df: df.select("dg").distinct(),
+        horizon=epoch_id,
+    )
 
 
 def read_coverage_health(spark: SparkSession, store_path: str) -> DataFrame:
     """One row: (vocab_size) — the corpus' cumulative distinct-shingle
     count. Counts the LIVE partitions only (newest committed base +
-    epochs it doesn't subsume, the ``_cms_live`` rule): a compaction
+    epochs it doesn't subsume, ``epoch_store.read_live``): a compaction
     crash can leave folded source epochs on disk next to the committed
     base (rmtree is ignore_errors), and a raw count would tally those
     digests twice. The live set is duplicate-free by construction.
     Missing or all-rowless store reads as vocab_size=0."""
-    from .corpus import _has_parquet_files
-
-    if not (os.path.exists(store_path) and _has_parquet_files(store_path)):
+    if not has_parquet_files(store_path):
         return spark.createDataFrame([(0,)], "vocab_size bigint")
-    return _cms_live(spark, store_path).agg(
+    return read_live(spark, store_path).agg(
         F.count(F.lit(1)).cast("bigint").alias("vocab_size")
     )
 
@@ -972,30 +722,15 @@ def start_coverage_monitor(
     max_files_per_trigger: int = 1,
     compact_every: int = 16,
 ):
-    """File-source streaming wrapper: each micro-batch's one-row
-    novelty summary lands in ``out_path`` under its own epoch
-    partition (replay overwrites it). availableNow drains then stops
-    (test mode)."""
-
-    def on_batch(batch_df: DataFrame, epoch: int) -> None:
-        row = coverage_monitor_batch(
+    """Each micro-batch's one-row novelty summary lands in
+    ``out_path``."""
+    return _start_file_monitor(
+        spark, src_path, checkpoint, schema, max_files_per_trigger,
+        lambda batch_df, epoch: coverage_monitor_batch(
             batch_df, store_path, id_col, text_col,
             epoch_id=epoch, k=k, compact_every=compact_every,
-        )
-        row.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"epoch={int(epoch)}")
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(src_path)
-    )
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        out_path=out_path,
     )
 
 
@@ -1091,9 +826,6 @@ def kmv_novelty_batch(
     per-batch localCheckpoints are scope-released before return — a
     long-running stream never waits on the ContextCleaner to reclaim
     them."""
-    from ..caching import CheckpointScope
-    from .corpus import _has_parquet_files
-
     scope = CheckpointScope()
     spark = batch_df.sparkSession
     n_docs = batch_df.count()
@@ -1105,11 +837,9 @@ def kmv_novelty_batch(
     else:
         hv = scope.ckpt(_kmv_batch_hashes(batch_df, id_col, text_col, k))
     n_sh = hv.count()
-    if os.path.exists(store_path) and _has_parquet_files(store_path):
+    if has_parquet_files(store_path):
         sample = scope.ckpt(
-            _kmv_bottom_k(
-                _cms_live_before(spark, store_path, epoch_id), kmv_k
-            )
+            _kmv_bottom_k(read_live(spark, store_path, before=epoch_id), kmv_k)
         )
         # one agg for both scalars — per-batch store work is a handful
         # of small jobs, so fixed job overhead dominates; don't split
@@ -1138,10 +868,10 @@ def kmv_novelty_batch(
         )
         n_new = int(miss * _KMV_NOV_H // float(h_k))
     _kmv_bottom_k(hv, kmv_k).write.mode("overwrite").parquet(
-        os.path.join(store_path, f"epoch={int(epoch_id)}")
+        part_path(store_path, epoch_id)
     )
     scope.release()  # hv/sample fully consumed (counts + store write)
-    if compact_every and epoch_id > 0 and epoch_id % compact_every == 0:
+    if compaction_due(epoch_id, compact_every):
         compact_kmv_novelty_store(spark, store_path, epoch_id, kmv_k=kmv_k)
     return spark.createDataFrame(
         [
@@ -1165,57 +895,27 @@ def compact_kmv_novelty_store(
     kmv_k: int = KMV_NOV_K,
 ) -> None:
     """Fold partitions STRICTLY EARLIER than ``epoch_id`` into the base
-    ``epoch=-<epoch_id>`` (their global bottom-k) and delete the
-    subsumed ones — the coverage-store regime: strictly-earlier so a
-    replay of ``epoch_id`` still probes a horizon that excludes its
-    own hashes. Committed bases are never rewritten; a partial base is
-    dropped and refolded; leftovers re-fold idempotently."""
-    if epoch_id <= 0:
-        raise ValueError("compaction epoch must be positive")
-    existing = _epoch_ids(store_path)
-    if not existing:
-        return
-    base = os.path.join(store_path, f"epoch=-{int(epoch_id)}")
-    if os.path.exists(base):
-        if os.path.exists(os.path.join(base, "_SUCCESS")):
-            for e in existing:
-                if e < epoch_id and e != -int(epoch_id):
-                    shutil.rmtree(
-                        os.path.join(store_path, f"epoch={e}"),
-                        ignore_errors=True,
-                    )
-            return
-        shutil.rmtree(base, ignore_errors=True)
-    from ..caching import CheckpointScope
-
-    with CheckpointScope() as scope:
-        folded = scope.ckpt(
-            _kmv_bottom_k(
-                _cms_live_before(spark, store_path, epoch_id), kmv_k
-            )
-        )
-        folded.write.mode("overwrite").parquet(base)
-    for e in _epoch_ids(store_path):
-        if e < epoch_id and e != -int(epoch_id):
-            shutil.rmtree(
-                os.path.join(store_path, f"epoch={e}"), ignore_errors=True
-            )
+    ``epoch=-<epoch_id>`` (their global bottom-k) — the coverage-store
+    regime: strictly-earlier so a replay of ``epoch_id`` still probes a
+    horizon that excludes its own hashes."""
+    compact(
+        spark, store_path, epoch_id,
+        lambda df: _kmv_bottom_k(df, kmv_k),
+        horizon=epoch_id,
+    )
 
 
 def read_kmv_novelty_health(
     spark: SparkSession, store_path: str, kmv_k: int = KMV_NOV_K
 ) -> DataFrame:
     """One row: (sample_size, vocab_size_est) from the live partitions
-    (leftover-tolerant via the ``_cms_live`` base-subsumption rule +
-    the distinct inside the bottom-k fold). Missing store reads as
-    zeros."""
-    from .corpus import _has_parquet_files
-
-    if not (os.path.exists(store_path) and _has_parquet_files(store_path)):
+    (leftover-tolerant via the live-set rule + the distinct inside the
+    bottom-k fold). Missing store reads as zeros."""
+    if not has_parquet_files(store_path):
         return spark.createDataFrame(
             [(0, 0)], "sample_size bigint, vocab_size_est bigint"
         )
-    s = _kmv_bottom_k(_cms_live(spark, store_path), kmv_k)
+    s = _kmv_bottom_k(read_live(spark, store_path), kmv_k)
     row = s.agg(
         F.count(F.lit(1)).alias("m"), F.max("hv").alias("hk")
     ).first()
@@ -1238,13 +938,11 @@ def read_kmv_source_health(
     estimate of x_source_novelty's n_distinct. Below capacity the
     sample IS the source's vocabulary hash set, so the estimate is
     exact. Missing store reads as an empty frame."""
-    from .corpus import _has_parquet_files
-
-    if not (os.path.exists(store_path) and _has_parquet_files(store_path)):
+    if not has_parquet_files(store_path):
         return spark.createDataFrame(
             [], "source string, sample_size bigint, vocab_size_est bigint"
         )
-    s = _kmv_per_source_bottom_k(_cms_live(spark, store_path), kmv_k)
+    s = _kmv_per_source_bottom_k(read_live(spark, store_path), kmv_k)
     stats = s.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("sample_size"),
         F.max("hv").alias("hk"),
@@ -1415,9 +1113,6 @@ def kmv_source_novelty_batch(
     bounded one-row-per-source result is collected and re-created
     rather than checkpointed), so a long-running stream never waits on
     the ContextCleaner to reclaim them."""
-    from ..caching import CheckpointScope
-    from .corpus import _has_parquet_files
-
     scope = CheckpointScope()
     spark = batch_df.sparkSession
     per_docs = batch_df.groupBy(
@@ -1435,10 +1130,10 @@ def kmv_source_novelty_batch(
     n_sh = hv.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shingles")
     )
-    if os.path.exists(store_path) and _has_parquet_files(store_path):
+    if has_parquet_files(store_path):
         sample = scope.ckpt(
             _kmv_per_source_bottom_k(
-                _cms_live_before(spark, store_path, epoch_id), kmv_k
+                read_live(spark, store_path, before=epoch_id), kmv_k
             )
         )
         stats = sample.groupBy("source").agg(
@@ -1518,10 +1213,10 @@ def kmv_source_novelty_batch(
         (vocab_before + n_new).alias("vocab_size"),
     ).collect()
     _kmv_per_source_bottom_k(region, kmv_k).write.mode("overwrite").parquet(
-        os.path.join(store_path, f"epoch={int(epoch_id)}")
+        part_path(store_path, epoch_id)
     )
     scope.release()  # hv/sample/region fully consumed (rows + store write)
-    if compact_every and epoch_id > 0 and epoch_id % compact_every == 0:
+    if compaction_due(epoch_id, compact_every):
         compact_kmv_source_store(spark, store_path, epoch_id, kmv_k=kmv_k)
     return spark.createDataFrame(
         out_rows,
@@ -1539,36 +1234,11 @@ def compact_kmv_source_store(
     """Strictly-earlier fold to a committed base — the corpus-level
     KMV store's regime, with the per-source two-phase bottom-k as the
     fold function."""
-    if epoch_id <= 0:
-        raise ValueError("compaction epoch must be positive")
-    existing = _epoch_ids(store_path)
-    if not existing:
-        return
-    base = os.path.join(store_path, f"epoch=-{int(epoch_id)}")
-    if os.path.exists(base):
-        if os.path.exists(os.path.join(base, "_SUCCESS")):
-            for e in existing:
-                if e < epoch_id and e != -int(epoch_id):
-                    shutil.rmtree(
-                        os.path.join(store_path, f"epoch={e}"),
-                        ignore_errors=True,
-                    )
-            return
-        shutil.rmtree(base, ignore_errors=True)
-    from ..caching import CheckpointScope
-
-    with CheckpointScope() as scope:
-        folded = scope.ckpt(
-            _kmv_per_source_bottom_k(
-                _cms_live_before(spark, store_path, epoch_id), kmv_k
-            )
-        )
-        folded.write.mode("overwrite").parquet(base)
-    for e in _epoch_ids(store_path):
-        if e < epoch_id and e != -int(epoch_id):
-            shutil.rmtree(
-                os.path.join(store_path, f"epoch={e}"), ignore_errors=True
-            )
+    compact(
+        spark, store_path, epoch_id,
+        lambda df: _kmv_per_source_bottom_k(df, kmv_k),
+        horizon=epoch_id,
+    )
 
 
 def start_source_novelty_monitor(
@@ -1586,27 +1256,13 @@ def start_source_novelty_monitor(
     max_files_per_trigger: int = 1,
     compact_every: int = 16,
 ):
-    """File-source streaming wrapper: each micro-batch's per-source
-    novelty rows land in ``out_path`` under their own epoch partition
-    (replay overwrites). availableNow drains then stops (test mode)."""
-
-    def on_batch(batch_df: DataFrame, epoch: int) -> None:
-        rows = kmv_source_novelty_batch(
+    """Each micro-batch's per-source novelty rows land in
+    ``out_path``."""
+    return _start_file_monitor(
+        spark, src_path, checkpoint, schema, max_files_per_trigger,
+        lambda batch_df, epoch: kmv_source_novelty_batch(
             batch_df, store_path, id_col, text_col, source_col=source_col,
             epoch_id=epoch, k=k, kmv_k=kmv_k, compact_every=compact_every,
-        )
-        rows.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"epoch={int(epoch)}")
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .json(src_path)
-    )
-    return (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        out_path=out_path,
     )

@@ -64,12 +64,12 @@ at pre-existing stores). Replay is unchanged: a replayed epoch reads
 the same committed plan < e and the same strictly-earlier store
 state, so it rewrites every figure bit-identically.
 
-Exactly-once regime: identical to every store here — each epoch
-writes ONLY its own partitions (batch-determined, so a replay
-rewrites them bit-identically), cumulative reads fold the live
-partitions, and compaction folds strictly-earlier partitions into a
-committed base (KMV bottom-k folds for the sketch stores, additive
-sums for the tally).
+Exactly-once regime: the committed-base epoch-store protocol
+(streaming/epoch_store.py) — each epoch writes ONLY its own partitions
+(batch-determined, so a replay rewrites them bit-identically),
+cumulative reads fold the live partitions, and compaction folds
+strictly-earlier partitions into a committed base (KMV bottom-k folds
+for the sketch stores, additive sums for the tally).
 
 Funnel fold: when the composed pipeline's ``out/funnel`` exists, the
 plan row carries the cumulative survivor fraction of the gates
@@ -92,12 +92,22 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import CheckpointScope
+from .epoch_store import (
+    compact,
+    compaction_due,
+    epoch_ids,
+    has_parquet_files,
+    is_committed,
+    live_epoch_ids,
+    mark_committed,
+    part_path,
+    read_live,
+)
 from .metrics import (
     KMV_NOV_K,
     _KMV_NOV_H,
     _KMV_SRC_SHARDS,
-    _cms_live_before,
-    _epoch_ids,
     compact_kmv_source_store,
     kmv_doc_stats,
     read_kmv_source_health,
@@ -134,14 +144,13 @@ def _pya_write_epoch(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    part = os.path.join(path, f"epoch={int(epoch_id)}")
+    part = part_path(path, epoch_id)
     shutil.rmtree(part, ignore_errors=True)
     os.makedirs(part, exist_ok=True)
     schema = pa.schema(schema_pairs)
     table = pa.Table.from_pylist(rows, schema=schema)
     pq.write_table(table, os.path.join(part, "part-00000.parquet"))
-    with open(os.path.join(part, "_SUCCESS"), "w"):
-        pass
+    mark_committed(path, epoch_id)
 
 
 def _pya_read_dir(path: str, columns: list[str] | None = None) -> list[dict]:
@@ -165,71 +174,24 @@ def _pya_read_dir(path: str, columns: list[str] | None = None) -> list[dict]:
     return rows
 
 
-def _latest_plan_epoch_before(out_plan_path: str, epoch_id: int) -> int | None:
-    """Epoch id of the latest COMMITTED plan partition strictly before
-    ``epoch_id`` (so a replay of ``epoch_id`` reads the same frame its
-    first run did), or None when no earlier plan exists."""
-    if not os.path.exists(out_plan_path):
-        return None
-    best = None
-    for name in os.listdir(out_plan_path):
-        if not name.startswith("epoch="):
-            continue
-        try:
-            ep = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        part = os.path.join(out_plan_path, name)
-        if ep < epoch_id and os.path.exists(os.path.join(part, "_SUCCESS")):
-            if best is None or ep > best:
-                best = ep
-    return best
-
-
 def _latest_plan_rows_before(
     out_plan_path: str, epoch_id: int
 ) -> list[dict] | None:
-    """Rows of the latest committed plan strictly before ``epoch_id``
-    (one bounded row per source ever seen), read driver-side."""
-    best = _latest_plan_epoch_before(out_plan_path, epoch_id)
+    """Rows of the latest COMMITTED plan partition strictly before
+    ``epoch_id`` (so a replay of ``epoch_id`` reads the same frame its
+    first run did; one bounded row per source ever seen), read
+    driver-side — or None when no earlier plan exists."""
+    best = max(
+        (
+            ep
+            for ep in epoch_ids(out_plan_path)
+            if ep < epoch_id and is_committed(out_plan_path, ep)
+        ),
+        default=None,
+    )
     if best is None:
         return None
-    return _pya_read_dir(os.path.join(out_plan_path, f"epoch={best}"))
-
-
-def _latest_plan_before(
-    spark: SparkSession, out_plan_path: str, epoch_id: int
-) -> DataFrame | None:
-    """DataFrame view of :func:`_latest_plan_rows_before` for callers
-    that join it (the pipeline's admission gate broadcasts it). The
-    rows are bounded, so the frame is collected-and-recreated: it
-    holds no executor blocks."""
-    best = _latest_plan_epoch_before(out_plan_path, epoch_id)
-    if best is None:
-        return None
-    return spark.read.parquet(os.path.join(out_plan_path, f"epoch={best}"))
-
-
-def _live_epoch_ids(store_path: str, exclude: int | None = None) -> list[int]:
-    """The store's live partition ids under base subsumption — the
-    driver-side twin of ``metrics._cms_live``'s filter: the newest
-    COMMITTED base plus batch epochs >= its magnitude. ``exclude``
-    drops one batch epoch (the caller holds its rows in memory)."""
-    if not os.path.isdir(store_path):
-        return []
-    eps = _epoch_ids(store_path)
-    bases = [
-        -e
-        for e in eps
-        if e < 0
-        and os.path.exists(os.path.join(store_path, f"epoch={e}", "_SUCCESS"))
-    ]
-    if bases:
-        b = max(bases)
-        live = [-b] + [e for e in eps if e >= b]
-    else:
-        live = [e for e in eps if e >= 0]
-    return [e for e in live if exclude is None or e != exclude]
+    return _pya_read_dir(part_path(out_plan_path, best))
 
 
 # --------------------------------------------------------------------------
@@ -350,9 +312,6 @@ def curation_plan_batch(
 
     See the module docstring for the r16 two-concurrent-job epoch
     cost model and the driver-side arithmetic parity argument."""
-    from ..caching import CheckpointScope
-    from .corpus import _has_parquet_files
-
     spark = batch_df.sparkSession
     p = _plan_paths(root)
     e = int(epoch_id)
@@ -383,9 +342,9 @@ def curation_plan_batch(
     def _live_tagged() -> DataFrame | None:
         parts = []
         for fam, store in (("sh", p["src_kmv"]), ("doc", p["doc_kmv"])):
-            if os.path.exists(store) and _has_parquet_files(store):
+            if has_parquet_files(store):
                 parts.append(
-                    _cms_live_before(spark, store, e).select(
+                    read_live(spark, store, before=e).select(
                         F.lit(fam).alias("fam"), "source", "hv"
                     )
                 )
@@ -524,7 +483,7 @@ def curation_plan_batch(
             "overwrite"
         ).partitionBy("fam").parquet(staging)
         for fam, store in (("sh", p["src_kmv"]), ("doc", p["doc_kmv"])):
-            tgt = os.path.join(store, f"epoch={e}")
+            tgt = part_path(store, e)
             os.makedirs(store, exist_ok=True)
             shutil.rmtree(tgt, ignore_errors=True)
             src_dir = os.path.join(staging, f"fam={fam}")
@@ -539,8 +498,7 @@ def curation_plan_batch(
                     [],
                 )
                 continue
-            with open(os.path.join(tgt, "_SUCCESS"), "w"):
-                pass
+            mark_committed(store, e)
         shutil.rmtree(staging, ignore_errors=True)
 
     # the two jobs read the SAME strictly-earlier store state and are
@@ -649,10 +607,10 @@ def curation_plan_batch(
         # figures are in memory) + full KMV store health reads AFTER
         # the store job committed epoch e (matching the former
         # read-after-write figures exactly)
-        for ep in _live_epoch_ids(p["tally"], exclude=e):
-            for r in _pya_read_dir(
-                os.path.join(p["tally"], f"epoch={ep}")
-            ):
+        for ep in live_epoch_ids(p["tally"]):
+            if ep == e:
+                continue
+            for r in _pya_read_dir(part_path(p["tally"], ep)):
                 c = cum.setdefault(
                     r["source"],
                     {"n_docs": 0, "n_tokens": 0, "n_occ": 0,
@@ -674,7 +632,7 @@ def curation_plan_batch(
             ("sh", p["src_kmv"], "vocab_est"),
             ("doc", p["doc_kmv"], "ddocs_est"),
         ):
-            if os.path.exists(store) and _has_parquet_files(store):
+            if has_parquet_files(store):
                 for r in read_kmv_source_health(
                     spark, store, kmv_k
                 ).select("source", "vocab_size_est").collect():
@@ -728,16 +686,10 @@ def curation_plan_batch(
         # e's rows were written above, so the window read is one
         # source of truth.
         recent: dict[str, list[int]] = {}
-        for name in os.listdir(p["out_novelty"]):
-            if not name.startswith("epoch="):
-                continue
-            try:
-                ep = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
+        for ep in epoch_ids(p["out_novelty"]):
             if not (e - int(drift_window) < ep <= e):
                 continue
-            for r in _pya_read_dir(os.path.join(p["out_novelty"], name)):
+            for r in _pya_read_dir(part_path(p["out_novelty"], ep)):
                 a = recent.setdefault(r["source"], [0, 0])
                 a[0] += int(r["n_new"])
                 a[1] += int(r["n_shingles"])
@@ -763,25 +715,17 @@ def curation_plan_batch(
     # (the streaming stand-in for the batch plan's knee) — tiny
     # per-epoch rows, read driver-side
     keep_fp = _PLAN_S
-    if os.path.isdir(p["funnel"]):
-        n_in = n_kept = 0
-        for name in os.listdir(p["funnel"]):
-            if not name.startswith("epoch="):
-                continue
-            try:
-                ep = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if ep > e:
-                continue
-            for r in _pya_read_dir(
-                os.path.join(p["funnel"], name),
-                ["n_in", "n_semantic_kept"],
-            ):
-                n_in += int(r.get("n_in") or 0)
-                n_kept += int(r.get("n_semantic_kept") or 0)
-        if n_in > 0:
-            keep_fp = (_PLAN_S * n_kept) // n_in
+    n_in = n_kept = 0
+    for ep in epoch_ids(p["funnel"]):
+        if ep > e:
+            continue
+        for r in _pya_read_dir(
+            part_path(p["funnel"], ep), ["n_in", "n_semantic_kept"]
+        ):
+            n_in += int(r.get("n_in") or 0)
+            n_kept += int(r.get("n_semantic_kept") or 0)
+    if n_in > 0:
+        keep_fp = (_PLAN_S * n_kept) // n_in
 
     cols = [
         "source", "n_docs", "n_tokens", "n_occ", "ddocs_est", "vocab_est",
@@ -799,7 +743,7 @@ def curation_plan_batch(
     ]
     _pya_write_epoch(p["out_plan"], e, schema_pairs, out_rows)
     scope.release()
-    if compact_every and e > 0 and e % compact_every == 0:
+    if compaction_due(e, compact_every):
         compact_plan_stores(spark, root, e, kmv_k=kmv_k)
     return spark.createDataFrame(
         out_rows,
@@ -809,20 +753,13 @@ def curation_plan_batch(
     )
 
 
-def _tally_cumulative(spark: SparkSession, tally_path: str) -> DataFrame:
-    """Per-source cumulative sums over the tally's LIVE partitions
-    (base subsumption — a committed base row is itself a sum of the
-    partitions it folded, so live rows never double count)."""
-    from .metrics import _cms_live
-
-    return (
-        _cms_live(spark, tally_path)
-        .groupBy("source")
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-            F.sum("n_occ").cast("bigint").alias("n_occ"),
-        )
+def _tally_fold(df: DataFrame) -> DataFrame:
+    """Per-source additive sums of tally rows — a committed base row is
+    itself such a sum of the partitions it folded."""
+    return df.groupBy("source").agg(
+        F.sum("n_docs").cast("bigint").alias("n_docs"),
+        F.sum("n_tokens").cast("bigint").alias("n_tokens"),
+        F.sum("n_occ").cast("bigint").alias("n_occ"),
     )
 
 
@@ -831,41 +768,8 @@ def compact_plan_tally(
 ) -> None:
     """Fold tally partitions STRICTLY EARLIER than ``epoch_id`` into
     the committed base ``epoch=-<epoch_id>`` (additive per-source
-    sums) and delete the subsumed ones — the standard committed-base
-    regime: a partial base is dropped and refolded; leftovers re-fold
-    to the same sums because the fold source is the LIVE set, never
-    base + subsumed copies."""
-    if epoch_id <= 0:
-        raise ValueError("compaction epoch must be positive")
-    existing = _epoch_ids(tally_path)
-    if not existing:
-        return
-    base = os.path.join(tally_path, f"epoch=-{int(epoch_id)}")
-    if os.path.exists(base):
-        if os.path.exists(os.path.join(base, "_SUCCESS")):
-            for ep in existing:
-                if ep < epoch_id and ep != -int(epoch_id):
-                    shutil.rmtree(
-                        os.path.join(tally_path, f"epoch={ep}"),
-                        ignore_errors=True,
-                    )
-            return
-        shutil.rmtree(base, ignore_errors=True)
-    folded = (
-        _cms_live_before(spark, tally_path, epoch_id)
-        .groupBy("source")
-        .agg(
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-            F.sum("n_occ").cast("bigint").alias("n_occ"),
-        )
-    )
-    folded.write.mode("overwrite").parquet(base)
-    for ep in _epoch_ids(tally_path):
-        if ep < epoch_id and ep != -int(epoch_id):
-            shutil.rmtree(
-                os.path.join(tally_path, f"epoch={ep}"), ignore_errors=True
-            )
+    sums, so the live-set fold never double counts a leftover)."""
+    compact(spark, tally_path, epoch_id, _tally_fold, horizon=epoch_id)
 
 
 def compact_plan_stores(
@@ -875,10 +779,8 @@ def compact_plan_stores(
     shared cadence."""
     p = _plan_paths(root)
     for store in ("src_kmv", "doc_kmv"):
-        if os.path.exists(p[store]):
-            compact_kmv_source_store(spark, p[store], epoch_id, kmv_k=kmv_k)
-    if os.path.exists(p["tally"]):
-        compact_plan_tally(spark, p["tally"], epoch_id)
+        compact_kmv_source_store(spark, p[store], epoch_id, kmv_k=kmv_k)
+    compact_plan_tally(spark, p["tally"], epoch_id)
 
 
 # Admission floor: a fully overrepresented source is still admitted at
@@ -928,9 +830,7 @@ def admission_draw(doc_id_col):
 
 def read_plan(spark: SparkSession, root: str, epoch_id: int) -> DataFrame:
     """The plan emitted at ``epoch_id`` (one row per source)."""
-    return spark.read.parquet(
-        os.path.join(_plan_paths(root)["out_plan"], f"epoch={int(epoch_id)}")
-    )
+    return spark.read.parquet(part_path(_plan_paths(root)["out_plan"], epoch_id))
 
 
 def sample_epoch_batch(
@@ -970,7 +870,10 @@ def sample_epoch_batch(
          (n * int(r["mix_ppm"])) % _PLAN_S)
         for r in prows
     ]
-    d = n - sum(q[1] for q in qrows)
+    # clamp: an over-full plan (mix_ppm summing above S) has a negative
+    # deficit and bumps no source — the batch twin's `rk <= deficit`;
+    # unclamped, a negative slice would bump all but |d| sources
+    d = max(0, n - sum(q[1] for q in qrows))
     order = sorted(qrows, key=lambda q: (-q[2], q[0]))
     bump = {q[0] for q in order[:d]}
     quota = plan.sparkSession.createDataFrame(
@@ -989,6 +892,6 @@ def sample_epoch_batch(
         .select("doc_id", "source", "rk", "src_quota")
     )
     picked.write.mode("overwrite").parquet(
-        os.path.join(root, "out", "sample", f"epoch={int(epoch_id)}")
+        part_path(os.path.join(root, "out", "sample"), epoch_id)
     )
     return picked

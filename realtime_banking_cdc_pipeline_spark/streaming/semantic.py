@@ -59,10 +59,9 @@ from ..functions.similarity import cosine_against, fx_dot
 from .corpus import (
     _compact_store,
     _effective_epoch,
-    _epoch_ids,
-    _has_parquet_files,
     _horizon_filter,
 )
+from .epoch_store import epoch_ids, has_parquet_files
 
 _SEM_THRESHOLD_DEFAULT = 0.35  # matches queries/round6b._SEMDEDUP_THRESHOLD
 _CELL_BUCKETS = 64
@@ -273,9 +272,9 @@ def semantic_ingest_batch(
         )
     )
     store = None
-    # _has_parquet_files, not exists: upstream gates can empty whole
+    # has_parquet_files, not exists: upstream gates can empty whole
     # batches (rowless epoch partitions only) - see corpus.ingest_batch.
-    if _has_parquet_files(store_path):
+    if has_parquet_files(store_path):
         store = _horizon_filter(
             spark.read.parquet(store_path), epoch_id, retention_epochs
         )
@@ -618,7 +617,7 @@ def retrain_semantic_codebook(
                 shutil.rmtree(
                     os.path.join(codebook_path, name), ignore_errors=True
                 )
-        for e in _epoch_ids(store_path):
+        for e in epoch_ids(store_path):
             if e < int(epoch_id) and e != -int(epoch_id):
                 shutil.rmtree(
                     os.path.join(store_path, f"epoch={e}"), ignore_errors=True

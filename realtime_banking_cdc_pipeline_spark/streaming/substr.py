@@ -82,9 +82,8 @@ from ..queries.round7 import _XSUB_K
 from .corpus import (
     _compact_store,
     _effective_epoch,
-    _epoch_ids,
-    _has_parquet_files,
 )
+from .epoch_store import epoch_ids, has_parquet_files
 
 _GRAM_BUCKETS = 64
 
@@ -171,10 +170,10 @@ def ingest_substr_batch(
 
     cnt_path = os.path.join(store_path, "counts")
     pos_path = os.path.join(store_path, "positions")
-    # _has_parquet_files, not exists: an upstream gate can empty whole
+    # has_parquet_files, not exists: an upstream gate can empty whole
     # batches, leaving stores whose every epoch partition is rowless -
     # nothing to compare against, and unreadable by a root scan.
-    if _has_parquet_files(cnt_path):
+    if has_parquet_files(cnt_path):
         # History and batch counts fold in ONE exchange: union the
         # horizon's (g, eff, cnt) rows with the batch's (tagged
         # eff = epoch_id) and aggregate per gram once with plain
@@ -206,7 +205,7 @@ def ingest_substr_batch(
             spark.read.parquet(cnt_path), epoch_id, retention_epochs
         )
         if retention_epochs is None or any(
-            e < 0 for e in _epoch_ids(cnt_path)
+            e < 0 for e in epoch_ids(cnt_path)
         ):
             hist = (
                 hist.groupBy(*_G_COLS, "eff")
@@ -251,7 +250,7 @@ def ingest_substr_batch(
     emitted = ng.join(newly.unionByName(already).distinct(), _G_COLS).select(
         "doc_id", "p"
     )
-    if _has_parquet_files(pos_path):
+    if has_parquet_files(pos_path):
         hist_pos = _hist_window(
             spark.read.parquet(pos_path), epoch_id, retention_epochs
         )
@@ -328,19 +327,19 @@ def compact_substr_store(
         for path in (cnt_path, pos_path):
             if not os.path.exists(path):
                 continue
-            for e in _epoch_ids(path):
+            for e in epoch_ids(path):
                 newest = e if e >= 0 else -e - 1
                 if newest < epoch_id - retention_epochs:
                     shutil.rmtree(
                         os.path.join(path, f"epoch={e}"), ignore_errors=True
                     )
         return
-    if _has_parquet_files(cnt_path):
+    if has_parquet_files(cnt_path):
         _compact_store(
             spark, cnt_path, epoch_id, "bucket", None,
             incremental=incremental, max_bases=max_bases,
         )
-    if _has_parquet_files(pos_path):
+    if has_parquet_files(pos_path):
         repeated = (
             _hist_window(spark.read.parquet(cnt_path), epoch_id, None)
             .groupBy("bucket", *_G_COLS, "eff")

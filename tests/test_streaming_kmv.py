@@ -339,14 +339,26 @@ def test_source_novelty_streaming_wrapper(spark, tmp_path):
 
 
 def test_monitor_batches_release_their_checkpoints(spark, tmp_path):
-    """r13 ADVICE closure: the KMV/coverage batch monitors (and their
-    compactors) must scope-release every localCheckpoint they take —
-    a long-running stream must not rely on the ContextCleaner to
-    reclaim per-batch blocks. Pin: the persistent-RDD registry is no
-    larger after a batch + compaction cycle than before it."""
+    """r13 ADVICE closure: the KMV/coverage batch monitors, the
+    HLL/CMS/DDSketch/Bloom store updates, and every compactor must
+    scope-release each localCheckpoint they take — a long-running
+    stream must not rely on the ContextCleaner to reclaim per-batch
+    blocks. Pin: the persistent-RDD registry is no larger after a
+    batch + compaction cycle than before it, except for the Bloom
+    gate's returned flag frames (caller-owned)."""
+    from pyspark.sql import functions as F
+
     from realtime_banking_cdc_pipeline_spark.streaming.metrics import (
+        bloom_gate_batch,
+        compact_bloom_store,
+        compact_cms_store,
+        compact_dds_store,
+        compact_hll_store,
         compact_kmv_source_store,
         kmv_source_novelty_batch,
+        update_cms_store,
+        update_dds_store,
+        update_hll_store,
     )
 
     def reg():
@@ -361,6 +373,8 @@ def test_monitor_batches_release_their_checkpoints(spark, tmp_path):
     kstore = str(tmp_path / "kmv")
     xstore = str(tmp_path / "exact")
     sstore = str(tmp_path / "src")
+    sketch = {n: str(tmp_path / n) for n in ("hll", "cms", "dds", "bloom")}
+    flag_rdds = set()
     before = reg()
     for e in range(3):
         batch = spark.createDataFrame(
@@ -376,8 +390,23 @@ def test_monitor_batches_release_their_checkpoints(spark, tmp_path):
             sbatch, sstore, "doc_id", "text", epoch_id=e
         )
         assert out.count() > 0  # returned frame usable after release
+        update_hll_store(sbatch, sketch["hll"], "source", "text", epoch_id=e)
+        update_cms_store(sbatch, sketch["cms"], "source", epoch_id=e)
+        update_dds_store(
+            sbatch.withColumn("v", F.col("doc_id") + 1), sketch["dds"], "v",
+            epoch_id=e,
+        )
+        flags = bloom_gate_batch(
+            batch, sketch["bloom"], "doc_id", "text", epoch_id=e
+        )
+        assert flags.count() == 10
+        flag_rdds.add(int(flags._jdf.queryExecution().logical().rdd().id()))
     compact_kmv_novelty_store(spark, kstore, 2)
     compact_coverage_store(spark, xstore, 2)
     compact_kmv_source_store(spark, sstore, 2)
-    leaked = reg() - before
+    compact_hll_store(spark, sketch["hll"], 2)
+    compact_cms_store(spark, sketch["cms"], 2)
+    compact_dds_store(spark, sketch["dds"], 2)
+    compact_bloom_store(spark, sketch["bloom"], 2)
+    leaked = reg() - before - flag_rdds
     assert not leaked, f"unreleased checkpoint/persist RDDs: {leaked}"

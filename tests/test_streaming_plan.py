@@ -675,3 +675,23 @@ def test_pipeline_feedback_admits_never_planned_source_fully(spark, tmp_path):
     plan1 = {r.source: r for r in read_plan(spark, root, 1).collect()}
     assert plan1["brandnew"].n_docs == 20
     assert sum(r.mix_ppm for r in plan1.values()) == _PLAN_S
+
+
+def test_sample_quota_overfull_plan_bumps_no_source(spark, tmp_path):
+    """A stored plan whose mix_ppm sums ABOVE S has a negative quota
+    deficit: like the batch twin's ``rk <= deficit``, no source gets a
+    remainder bump (a negative slice once bumped all but |deficit|)."""
+    from realtime_banking_cdc_pipeline_spark.streaming.plan import (
+        sample_epoch_batch,
+    )
+
+    plan = spark.createDataFrame(
+        [(s, 400_000) for s in ("a", "b", "c")], "source string, mix_ppm bigint"
+    )
+    survivors = spark.createDataFrame(
+        [(i, "abc"[i % 3]) for i in range(30)], "doc_id bigint, source string"
+    )
+    picked = sample_epoch_batch(survivors, plan, str(tmp_path), 0, n=10)
+    got = {r.source: r["count"] for r in picked.groupBy("source").count().collect()}
+    # base quota 10 * 0.4 = 4 per source, remainders all zero
+    assert got == {"a": 4, "b": 4, "c": 4}
