@@ -1,5 +1,5 @@
 from .dedup import dedup_exact, dedup_latest
-from .incremental import high_water_mark, incremental_merge
+from .incremental import incremental_merge
 from .quality import (
     expect_empty,
     orphan_rows,
@@ -14,7 +14,6 @@ __all__ = [
     "dedup_latest",
     "dedup_exact",
     "incremental_merge",
-    "high_water_mark",
     "scd2_apply",
     "scd2_from_change_log",
     "expect_empty",

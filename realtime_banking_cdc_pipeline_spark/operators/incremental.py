@@ -1,56 +1,43 @@
-"""Incremental materialization (C3/A3 in SURVEY.md §2.7).
+"""Incremental materialization (C3 in SURVEY.md §2.7).
 
 The reference's ``fact_transactions`` is dbt ``materialized='incremental',
 unique_key='transaction_id'`` (``fact_transactions.sql:1``): first run
-CTAS, later runs upsert only rows newer than the target's high-water
-mark (``readme.md:144-151,597-599``), with MERGE-on-unique-key making
+CTAS, later runs upsert the batch, with MERGE-on-unique-key making
 retries idempotent (``readme.md:704-705``).
 
 Parquet-friendly implementation: fold the batch to one row per key,
 then ``target anti-join batch ⊎ batch`` — exactly MERGE semantics
-(matched rows replaced, unmatched inserted). On Delta this becomes a
-real ``MERGE INTO``; the anti-join shuffles both sides by the unique
-key, so at scale bucket the target by that key to elide its exchange.
+(matched rows replaced, unmatched inserted). Both sides shuffle by the
+unique key, so at scale bucket the target by that key to elide its
+exchange.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import dedup_latest
-
-
-def high_water_mark(target: DataFrame | None, ts_col: str):
-    """MAX(ts) of the target (A3) — None for the first run. A single
-    agg action; at scale this reads parquet footer stats only."""
-    if target is None:
-        return None
-    row = target.agg(F.max(ts_col).alias("hwm")).collect()[0]
-    return row["hwm"]
 
 
 def incremental_merge(
     target: DataFrame | None,
     batch: DataFrame,
     unique_key: str,
-    order_by: Sequence[str | Column] = (),
-    hwm_col: str | None = None,
+    order_by: Sequence[str] = (),
 ) -> DataFrame:
     """Upsert ``batch`` into ``target`` on ``unique_key``.
 
-    - ``order_by``: recency priority for folding multi-image batches
-      (at-least-once redelivery safe — idempotent by construction).
-      When every order column also exists in the target, the merge is
-      recency-aware ACROSS batches too: a stale image redelivered in a
-      later batch (past any watermark-dedup TTL) cannot overwrite a
-      newer target row. Ties prefer the batch row (idempotent
-      re-application of the same batch).
-    - ``hwm_col``: optionally pre-filter the batch to rows newer than
-      the target's high-water mark, mirroring the reference's
-      ``updated_at > (SELECT MAX(updated_at) FROM {{ this }})``.
+    ``order_by`` names recency columns present in both frames. Without
+    it, batch rows replace matched target rows (anti-join ⊎ batch).
+    With it, multi-image batches fold to their latest row (at-least-once
+    redelivery safe — idempotent by construction) and the merge is
+    recency-aware ACROSS batches too: a stale image redelivered in a
+    later batch (past any watermark-dedup TTL) cannot overwrite a newer
+    target row. Ties prefer the batch row (idempotent re-application of
+    the same batch).
     """
     if order_by:
         batch = dedup_latest(batch, [unique_key], order_by)
@@ -58,14 +45,7 @@ def incremental_merge(
         batch = batch.dropDuplicates([unique_key])
     if target is None:
         return batch
-    if hwm_col is not None:
-        hwm = high_water_mark(target, hwm_col)
-        if hwm is not None:
-            batch = batch.filter(F.col(hwm_col) > F.lit(hwm))
-    str_order = [c for c in order_by if isinstance(c, str)]
-    if order_by and len(str_order) == len(list(order_by)) and all(
-        c in target.columns for c in str_order
-    ):
+    if order_by:
         # union ⊎ dedup-latest: same single key-shuffle as the anti-join
         # shape, but matched rows resolve by recency instead of blind
         # batch-wins replacement. `_src` breaks exact-recency ties in the
@@ -74,7 +54,7 @@ def incremental_merge(
             target.withColumn("_src", F.lit(0))
             .unionByName(batch.select(*target.columns).withColumn("_src", F.lit(1)))
         )
-        return dedup_latest(tagged, [unique_key], [*str_order, "_src"]).drop("_src")
+        return dedup_latest(tagged, [unique_key], [*order_by, "_src"]).drop("_src")
     kept = target.join(batch.select(unique_key), unique_key, "left_anti")
     return kept.unionByName(batch.select(*target.columns))
 

@@ -203,10 +203,9 @@ def scd2_from_change_log(
             .filter(F.col("__prev").isNull() | (F.col("__chash") != F.col("__prev")))
             .drop("__chash", "__prev")
         )
-    w2 = Window.partitionBy(key).orderBy(*order)
     out = (
         df.withColumn("valid_from", F.col(as_of_col))
-        .withColumn("valid_to", F.lead(as_of_col).over(w2))
+        .withColumn("valid_to", F.lead(as_of_col).over(w))
         .withColumn("is_current", F.col("valid_to").isNull())
     )
     if deleted_col:

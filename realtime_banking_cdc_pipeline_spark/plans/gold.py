@@ -9,8 +9,8 @@
 
 Scale notes: the dims are small relative to facts → the join is
 broadcast (explicit hint, though Catalyst would pick it under the
-10 MB threshold anyway). The fact merge shuffles on ``transaction_id``
-only for the anti-join; with a Delta target it becomes MERGE INTO.
+10 MB threshold anyway). The fact merge is one shuffle on
+``transaction_id`` (the recency-aware union ⊎ dedup).
 """
 
 from __future__ import annotations

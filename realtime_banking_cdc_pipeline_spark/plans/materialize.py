@@ -1,52 +1,15 @@
-"""Materialization modes (C5 in SURVEY.md §2.7) + catalog registration
-(S9): the dbt view/table/incremental trichotomy mapped to Spark.
-
-- view        → ``createOrReplaceTempView`` (zero-copy logical alias;
-                Catalyst inlines + prunes through it — ``stg_*.sql:1``)
-- table       → parquet ``saveAsTable``-style overwrite (CTAS; ``dim_*``)
-- incremental → anti-join ⊎ batch merge on a unique key, persisted
-                (``fact_transactions.sql:1``; Delta MERGE in connector
-                mode — jar not in this container, gated import)
-
-At scale, table/incremental writes partition by the declared columns so
-reads prune (readme.md:134-140's clustering keys).
+"""Incremental materialization (C5 in SURVEY.md §2.7): dbt's
+``materialized='incremental'`` mapped to Spark — anti-join ⊎ batch merge
+on a unique key, persisted through the staged swap
+(``fact_transactions.sql:1``).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.incremental import incremental_merge
-from ..sources.parquet_io import _fs, write_staged
-
-
-def materialize_view(df: DataFrame, name: str) -> None:
-    df.createOrReplaceTempView(name)
-
-
-def fs_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence check — works for any scheme (file/hdfs/s3a),
-    unlike os.path.exists."""
-    fs, hpath = _fs(spark, path)
-    return fs.exists(hpath)
-
-
-def materialize_table(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """Staged write (``parquet_io.write_staged``): the new table lands
-    in a staging dir and is promoted with the rename-based
-    ``swap_into_place`` — the previous table is retired to
-    ``<path>__old`` and deleted only after the new one is in place, so
-    a crash never leaves the path truncated (``recover_swap(path)``
-    repairs the brief both-copies-on-disk window). A transactional
-    format (Delta/Iceberg) is the upgrade — that's the connector-mode
-    path."""
-    write_staged(df, path, partition_cols)
+from ..sources.parquet_io import recover_swap, write_staged
 
 
 def materialize_incremental(
@@ -54,62 +17,14 @@ def materialize_incremental(
     batch: DataFrame,
     path: str,
     unique_key: str,
-    order_by: list[str] | None = None,
 ) -> DataFrame:
     """First run CTAS, then merge-on-unique-key — dbt incremental
     semantics on plain parquet (idempotent under redelivery), written
-    through the same staged swap as ``materialize_table``."""
+    through ``write_staged``. A swap interrupted by a crash is repaired
+    first, so the merge never restarts from an empty target."""
     target = None
-    if fs_exists(spark, path):
+    if recover_swap(spark, path) != "missing":
         target = spark.read.parquet(path)
-    merged = incremental_merge(target, batch, unique_key, order_by=order_by or [])
+    merged = incremental_merge(target, batch, unique_key)
     write_staged(merged, path)
     return spark.read.parquet(path)
-
-
-def try_delta_merge(
-    spark: SparkSession,
-    batch: DataFrame,
-    path: str,
-    unique_key: str,
-):
-    """Delta ``MERGE INTO`` connector — the transactional upgrade of
-    ``materialize_incremental`` (closes its staging-rewrite crash window
-    and makes the merge O(touched files) instead of full-rewrite).
-
-    VERIFIED UNAVAILABLE in this container (round 2): ``import delta``
-    raises ModuleNotFoundError, the delta-spark jar is not on the Spark
-    classpath, and the environment forbids package installation — so
-    this stays an import-gated stub rather than a fake. The parquet
-    anti-join⊎append path implements identical MERGE semantics
-    (tested: tests/test_materialize_stateful.py incremental cycle,
-    tests/test_durable_gold.py cross-restart merge).
-
-    When delta-spark IS present this executes the real MERGE:
-    matched-by-key rows update, unmatched insert — byte-equivalent
-    results to the parquet path by construction."""
-    try:
-        from delta.tables import DeltaTable
-    except ImportError as e:
-        raise NotImplementedError(
-            "delta-spark not installed; use materialize_incremental (parquet)"
-        ) from e
-    if DeltaTable.isDeltaTable(spark, path):
-        tgt = DeltaTable.forPath(spark, path)
-        (
-            tgt.alias("t")
-            .merge(batch.alias("b"), f"t.{unique_key} = b.{unique_key}")
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-    else:
-        batch.write.format("delta").save(path)
-    return spark.read.format("delta").load(path)
-
-
-def register_sources(spark: SparkSession, sf_dir: str, tables: list[str]) -> None:
-    """S9 source declaration: bind testdata parquet into the session
-    catalog (the sources.yaml → BANKING.RAW.* binding)."""
-    for t in tables:
-        spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).createOrReplaceTempView(t)

@@ -170,8 +170,7 @@ SELECT user_id, event_id, event_type, value, ts FROM (
         "C3 incremental MERGE-on-unique-key emulation: batch folds to latest "
         "image; matched rows resolve by RECENCY (a stale image redelivered in "
         "a later batch cannot clobber a newer target row), batch wins exact "
-        "ties; unmatched kept (Delta MERGE with a timestamp guard in "
-        "connector mode)."
+        "ties; unmatched kept (Delta MERGE with a timestamp guard)."
     ),
 )
 def c3_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

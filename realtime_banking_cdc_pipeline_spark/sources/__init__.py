@@ -1,3 +1,3 @@
-from .parquet_io import load_tables, read_table, write_partitioned
+from .parquet_io import read_table, write_partitioned
 
-__all__ = ["read_table", "load_tables", "write_partitioned"]
+__all__ = ["read_table", "write_partitioned"]

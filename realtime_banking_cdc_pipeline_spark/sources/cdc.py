@@ -57,12 +57,3 @@ def to_bronze_rows(events: DataFrame, drop_deletes: bool = True) -> DataFrame:
         .withColumn("_deleted", F.lit(True))
     )
     return upserts.unionByName(deletes)
-
-
-def with_ingest_date(df: DataFrame, ts_ms_col: str = "ts_ms") -> DataFrame:
-    """Hive partition column like the consumer's ``date=YYYY-MM-DD``
-    layout (kafka_to_minio.py:44-49)."""
-    return df.withColumn(
-        "ingest_date",
-        F.date_format(F.timestamp_millis(F.col(ts_ms_col)), "yyyy-MM-dd"),
-    )

@@ -21,10 +21,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,
@@ -69,18 +65,13 @@ def _fs(spark: SparkSession, path: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
-def write_staged(
-    df: DataFrame, path: str, partition_cols: list[str] | None = None
-) -> None:
+def write_staged(df: DataFrame, path: str) -> None:
     """The one way a durable table is (re)written: write ``df`` to
     ``<path>__staging``, then promote it with ``swap_into_place``. A
     frame whose lineage READS ``path`` cannot overwrite it in place,
     and an in-place overwrite truncates the target if it crashes."""
     staging = path.rstrip("/") + "__staging"
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(staging)
+    df.write.mode("overwrite").parquet(staging)
     swap_into_place(df.sparkSession, staging, path)
 
 
@@ -96,8 +87,7 @@ def swap_into_place(spark: SparkSession, staging: str, path: str) -> None:
     ``__old`` is garbage. ``recover_swap`` repairs every intermediate
     state. Renames are atomic metadata ops on HDFS/local/ABFS; on S3
     "rename" is copy+delete, so there a transactional table format
-    (Delta/Iceberg — see ``plans.materialize.try_delta_merge``) is the
-    real answer."""
+    (Delta/Iceberg) is the real answer."""
     fs, hstaging = _fs(spark, staging)
     hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     hold = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
@@ -142,57 +132,13 @@ def recover_swap(spark: SparkSession, path: str) -> str:
     return "missing"
 
 
-SUPPORTED_FORMATS = ("parquet", "orc", "json", "csv")
-
-
-def write_any(df: DataFrame, path: str, fmt: str = "parquet",
-              mode: str = "overwrite") -> None:
-    """Format-agnostic sink. Parquet/ORC carry their own schema; CSV
-    writes a header (and the reader below re-applies the exact schema —
-    CSV's types are lossy on disk by nature)."""
-    if fmt not in SUPPORTED_FORMATS:
-        raise ValueError(f"format {fmt!r} not in {SUPPORTED_FORMATS}")
-    w = df.write.mode(mode).format(fmt)
-    if fmt == "csv":
-        w = w.option("header", "true").option("timestampFormat",
-                                              "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-    w.save(path)
-
-
-def read_any(spark: SparkSession, path: str, fmt: str = "parquet",
-             schema=None) -> DataFrame:
-    """Format-agnostic source: columnar formats self-describe; text
-    formats (json/csv) take the explicit schema the caller owns —
-    schema inference at 100 TB means scanning the data twice."""
-    if fmt not in SUPPORTED_FORMATS:
-        raise ValueError(f"format {fmt!r} not in {SUPPORTED_FORMATS}")
-    r = spark.read.format(fmt)
-    if schema is not None:
-        r = r.schema(schema)
-    if fmt == "csv":
-        r = r.option("header", "true").option("timestampFormat",
-                                              "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-    return r.load(path)
-
-
-def read_json_tolerant(spark: SparkSession, path: str, schema) -> DataFrame:
-    """PERMISSIVE JSON read with corrupt-record quarantine — the Spark
-    equivalent of ``ON_ERROR='CONTINUE'`` (minio_to_snowflake_dag.py:81)."""
-    return (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
 def read_csv_tolerant(
     spark: SparkSession, path: str, schema, header: bool = True
 ) -> DataFrame:
-    """PERMISSIVE CSV read with corrupt-record quarantine — the same
-    ``ON_ERROR='CONTINUE'`` contract as :func:`read_json_tolerant`
-    (minio_to_snowflake_dag.py:81) for delimited landings. Malformed
-    rows surface in ``_corrupt_record`` instead of failing the load."""
+    """PERMISSIVE CSV read with corrupt-record quarantine — the Spark
+    equivalent of ``ON_ERROR='CONTINUE'`` (minio_to_snowflake_dag.py:81)
+    for delimited landings. Malformed rows surface in
+    ``_corrupt_record`` instead of failing the load."""
     return (
         spark.read.schema(schema)
         .option("header", str(header).lower())

@@ -72,82 +72,6 @@ def _make_update(ttl_ms):
     return _update
 
 
-def tws_available() -> bool:
-    """transformWithState's Python state protocol speaks protobuf
-    (pyspark.sql.streaming.proto) — VERIFIED UNAVAILABLE in this
-    container (``import google.protobuf`` fails; package installation
-    forbidden), so the operator below is runnable only where protobuf
-    ships. The applyInPandasWithState twin above carries the tested
-    path here."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_balances_tws(txns: DataFrame, ttl_ms: int | None = None) -> DataFrame:
-    """The same per-account balance machine on Spark 4's
-    ``transformWithState`` API — typed per-key ValueState in the RocksDB
-    state store (changelog-checkpointed, state scales with live keys per
-    executor, not JVM heap) instead of the applyInPandasWithState blob.
-    State TTL is declarative here (``ttlDurationMs``) — no timeout
-    callbacks, and the query self-terminates under availableNow.
-
-    Callers must run with
-    ``spark.sql.streaming.stateStore.providerClass =
-    ...state.RocksDBStateStoreProvider`` (transformWithState requires
-    it) and an environment where ``tws_available()`` is True — the
-    query fails at initialization otherwise (the gate test pins that)."""
-    import pandas as pd  # noqa: F811 (ships to executors with the processor)
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class BalanceProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "balance", STATE_SCHEMA, ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                balance, n = self._state.get()
-            else:
-                balance, n = 0.0, 0
-            delta = 0.0
-            cnt = 0
-            for pdf in rows:
-                if len(pdf):
-                    sign = (pdf["txn_type"] == "DEPOSIT").map({True: 1.0, False: -1.0})
-                    delta += float((sign * pdf["amount"]).sum())
-                    cnt += len(pdf)
-            balance += delta
-            n += cnt
-            self._state.update((balance, n))
-            yield pd.DataFrame(
-                {
-                    "account_id": [key[0]],
-                    "balance_delta": [delta],
-                    "running_balance": [balance],
-                    "n_txns": [n],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # state TTL requires a clock: Spark rejects getValueState(
-    # ttlDurationMs=...) unless timeMode is ProcessingTime, so the mode
-    # follows the ttl argument (ttl_ms=None -> "None", self-terminating
-    # under availableNow; with a TTL the query keeps the PT clock alive)
-    return txns.groupBy("account_id").transformWithStateInPandas(
-        statefulProcessor=BalanceProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
-    )
-
-
 def running_balances(txns: DataFrame, ttl_ms: int | None = STATE_TTL_MS) -> DataFrame:
     """Per-micro-batch running balance per account with processing-time
     state TTL. Input columns: account_id long, txn_type string,

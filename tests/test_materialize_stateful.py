@@ -1,5 +1,5 @@
-"""C5 materialization modes, S9 catalog binding, and the custom
-stateful streaming operator."""
+"""C5 incremental materialization, crash repair of durable state, and
+the custom stateful streaming operator."""
 
 from __future__ import annotations
 
@@ -10,67 +10,72 @@ from pyspark.sql import functions as F
 
 from realtime_banking_cdc_pipeline_spark.plans.materialize import (
     materialize_incremental,
-    materialize_table,
-    materialize_view,
-    register_sources,
 )
 
 
 def test_view_table_incremental_cycle(spark):
+    """Incremental materialization: first run CTAS, second run
+    upserts, a re-applied batch is a no-op."""
     d = tempfile.mkdtemp(prefix="mat_")
     try:
-        df = spark.range(10).select(
-            F.col("id"), (F.col("id") * 2).alias("v"), (F.col("id") % 3).alias("p")
-        )
-        materialize_view(df, "mat_view_t")
-        assert spark.sql("SELECT SUM(v) s FROM mat_view_t").collect()[0]["s"] == 90
-
-        materialize_table(df, f"{d}/tbl", partition_cols=["p"])
-        back = spark.read.parquet(f"{d}/tbl")
-        assert back.count() == 10 and set(back.columns) == {"id", "v", "p"}
-
-        # incremental: first run CTAS, second run upserts/dedups
         b1 = spark.range(5).select(F.col("id"), F.lit(1).alias("ver"))
-        out1 = materialize_incremental(spark, b1, f"{d}/inc", "id", order_by=["ver"])
+        out1 = materialize_incremental(spark, b1, f"{d}/inc", "id")
         assert out1.count() == 5
         b2 = spark.range(3, 8).select(F.col("id"), F.lit(2).alias("ver"))
-        out2 = materialize_incremental(spark, b2, f"{d}/inc", "id", order_by=["ver"])
+        out2 = materialize_incremental(spark, b2, f"{d}/inc", "id")
         got = {r["id"]: r["ver"] for r in out2.collect()}
         assert got == {0: 1, 1: 1, 2: 1, 3: 2, 4: 2, 5: 2, 6: 2, 7: 2}
         # re-applying the same batch is a no-op (idempotent retries, C4)
-        out3 = materialize_incremental(spark, b2, f"{d}/inc", "id", order_by=["ver"])
+        out3 = materialize_incremental(spark, b2, f"{d}/inc", "id")
         assert {r["id"]: r["ver"] for r in out3.collect()} == got
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_delta_merge_gate_is_honest(spark):
-    """delta-spark is verified-absent in this container: the connector
-    must fail loudly with the parquet alternative named, never silently
-    fake a MERGE. (With the jar present the same call runs real MERGE
-    INTO; this pins the gated behavior.)"""
-    import pytest
+def test_load_repairs_interrupted_swap(spark, fixture_frames, tmp_path):
+    """A crash between the two renames of ``swap_into_place`` leaves a
+    state table absent with its data beside it (``__old``, or a
+    committed ``__staging``). ``MedallionState.load`` must repair the
+    swap and load the saved rows, not start that table from empty."""
+    import os
 
-    from realtime_banking_cdc_pipeline_spark.plans.materialize import try_delta_merge
-
-    try:
-        import delta  # noqa: F401
-
-        pytest.skip("delta-spark present; gate test not applicable")
-    except ImportError:
-        pass
-    df = spark.range(3)
-    with pytest.raises(NotImplementedError, match="materialize_incremental"):
-        try_delta_merge(spark, df, "/tmp/never_written_delta", "id")
-
-
-def test_register_sources_catalog(spark):
-    register_sources(spark, "/root/testdata/sf0.001", ["region", "nation"])
-    joined = spark.sql(
-        """SELECT r.r_name, COUNT(*) n FROM nation n
-           JOIN region r ON n.n_regionkey = r.r_regionkey GROUP BY r.r_name"""
+    from realtime_banking_cdc_pipeline_spark.plans.medallion import (
+        MedallionState,
+        run_pipeline,
     )
-    assert joined.count() == 5
+
+    saved = str(tmp_path / "saved")
+    state, _ = run_pipeline(spark, fixture_frames)
+    state.save(saved)
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    want = {
+        t: rows(spark.read.parquet(f"{saved}/{t}"))
+        for t in ("snapshot_accounts", "fact_state")
+    }
+
+    # swap cut between its renames, no committed staging left: the
+    # retired copy is restored
+    d1 = str(tmp_path / "old_only")
+    shutil.copytree(saved, d1)
+    os.rename(f"{d1}/snapshot_accounts", f"{d1}/snapshot_accounts__old")
+    loaded = MedallionState.load(spark, d1)
+    assert loaded.snapshots["accounts"] is not None
+    assert rows(loaded.snapshots["accounts"]) == want["snapshot_accounts"]
+    assert not os.path.exists(f"{d1}/snapshot_accounts__old")
+
+    # swap cut between its renames after the staging write committed:
+    # the new copy is promoted
+    d2 = str(tmp_path / "staged_only")
+    shutil.copytree(saved, d2)
+    os.rename(f"{d2}/fact_state", f"{d2}/fact_state__staging")
+    assert os.path.exists(f"{d2}/fact_state__staging/_SUCCESS")
+    loaded = MedallionState.load(spark, d2)
+    assert loaded.fact is not None
+    assert rows(loaded.fact) == want["fact_state"]
+    assert not os.path.exists(f"{d2}/fact_state__staging")
 
 
 def _drain(q, done, timeout=120):
@@ -199,58 +204,6 @@ def test_stateful_balances_accumulate_across_restarts(spark):
     run()
     assert (1, 100.0, 1) in emitted  # first run's state
     assert (1, 75.0, 2) in emitted  # resumed state accumulated, not reset
-
-
-def test_stateful_running_balances_transform_with_state(spark):
-    """Spark 4 transformWithState twin of running_balances: RocksDB
-    ValueState, declarative TTL, self-terminating under availableNow.
-    Skips where the protobuf dependency of the TWS python protocol is
-    absent (verified so in this container — tws_available docstring)."""
-    import pytest
-    import tempfile as tf
-
-    from realtime_banking_cdc_pipeline_spark.streaming.stateful import (
-        running_balances_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf absent: transformWithState python "
-                    "protocol cannot initialize in this container")
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tf.mkdtemp(prefix="txns_tws_")
-        spark.createDataFrame(
-            [(1, "DEPOSIT", 100.0), (1, "WITHDRAWAL", 30.0), (2, "DEPOSIT", 50.0)],
-            "account_id long, txn_type string, amount double",
-        ).write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(
-            "account_id long, txn_type string, amount double"
-        ).parquet(src)
-        q = (
-            running_balances_tws(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("balances_tws_out")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "tws availableNow run should self-terminate"
-        got = {
-            r["account_id"]: (r["running_balance"], r["n_txns"])
-            for r in spark.sql("SELECT * FROM balances_tws_out").collect()
-        }
-        assert got == {1: (70.0, 2), 2: (50.0, 1)}
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 def test_compact_parquet_reduces_file_count(spark, tmp_path):

@@ -297,7 +297,7 @@ def test_corrupt_envelopes_are_quarantined_not_fatal(spark, fixture_frames):
 def test_read_csv_tolerant_quarantines_bad_rows(spark, tmp_path):
     """PERMISSIVE CSV read: well-formed rows parse, malformed rows land
     in _corrupt_record instead of failing the load — the same
-    ON_ERROR='CONTINUE' contract as read_json_tolerant."""
+    ON_ERROR='CONTINUE' contract the Bronze envelope parse keeps."""
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType,
     )

@@ -118,15 +118,6 @@ def test_incremental_merge_upsert_and_idempotency(spark):
     assert {r["id"]: r["v"] for r in again.collect()} == out
 
 
-def test_incremental_merge_high_water_mark_filters_stale(spark):
-    target = _rows(spark, [(1, "new", T0 + dt.timedelta(hours=2), 5)])
-    stale_batch = _rows(spark, [(9, "stale", T0, 1)])
-    merged = incremental_merge(
-        target, stale_batch, "id", order_by=["ts", "seq"], hwm_col="ts"
-    )
-    assert {r["id"] for r in merged.collect()} == {1}
-
-
 def test_connected_components_chain_and_isolated(spark):
     """Min-label propagation: a 5-node chain (diameter > 1 round)
     collapses to its min id; isolated nodes from `nodes` self-label."""
@@ -369,33 +360,6 @@ def test_image_decode_bmp_and_corrupt(spark):
     rows = {r["media_id"]: r for r in extract_image_features(media).collect()}
     assert rows[1]["width"] == 8 and rows[1]["sum_r"] is not None
     assert rows[2]["width"] is None and rows[2]["sum_r"] is None
-
-
-def test_multi_format_round_trip(spark, tmp_path):
-    """S5/S7 source-sink breadth: the same frame round-trips through
-    parquet/orc/json/csv with identical values (text formats re-apply
-    the writer's schema — inference at scale double-scans)."""
-    import datetime as dt
-
-    from realtime_banking_cdc_pipeline_spark.sources.parquet_io import (
-        SUPPORTED_FORMATS,
-        read_any,
-        write_any,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "a,b \"quoted\"", 1.5, dt.datetime(2024, 1, 1, 12, 0, 0), True),
-            (2, None, -0.25, dt.datetime(2024, 6, 30, 23, 59, 59), False),
-        ],
-        "id long, s string, x double, ts timestamp, flag boolean",
-    )
-    want = sorted(tuple(r) for r in df.collect())
-    for fmt in SUPPORTED_FORMATS:
-        p = str(tmp_path / f"rt_{fmt}")
-        write_any(df, p, fmt)
-        back = read_any(spark, p, fmt, schema=df.schema)
-        assert sorted(tuple(r) for r in back.collect()) == want, fmt
 
 
 def test_incremental_rollup_matches_full_recompute(spark):
