@@ -98,6 +98,21 @@ class CheckpointScope:
     def ckpt(self, df: DataFrame) -> DataFrame:
         return _checkpoint_and_record(df, self._rdds)
 
+    def adopt(self, *frames: DataFrame) -> None:
+        """Take over the checkpoints ``frames`` read (a callee's returned
+        localCheckpoint, or a frame derived from one): their
+        ``LogicalRDD`` leaves' RDD ids, which ``release`` frees."""
+        for df in frames:
+            try:
+                sc = df.sparkSession.sparkContext
+                leaves = df._jdf.queryExecution().logical().collectLeaves()
+                for i in range(leaves.size()):
+                    leaf = leaves.apply(i)
+                    if leaf.getClass().getSimpleName() == "LogicalRDD":
+                        self._rdds.append((sc, int(leaf.rdd().id())))
+            except Exception:
+                pass
+
     def release(self) -> int:
         return _release_rdds(self._rdds)
 

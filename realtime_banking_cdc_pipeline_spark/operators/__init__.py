@@ -1,4 +1,4 @@
-from .dedup import dedup_exact, dedup_latest
+from .dedup import dedup_latest
 from .incremental import incremental_merge
 from .quality import (
     expect_empty,
@@ -12,7 +12,6 @@ from .windows import sessionize, top_k_per_group, zscore_anomalies
 
 __all__ = [
     "dedup_latest",
-    "dedup_exact",
     "incremental_merge",
     "scd2_apply",
     "scd2_from_change_log",

@@ -12,8 +12,8 @@ explicit tiebreak columns (typically the Debezium ``ts_ms`` and the
 monotonic ``lsn``/event id) so results are stable across runs and
 engines.
 
-Scale: both operators are a single hash-shuffle on the key — no global
-sort, no driver-side state. At 100 TB prefer feeding them from a source
+Scale: one hash-shuffle on the key — no global sort, no driver-side
+state. At 100 TB prefer feeding them from a source
 already bucketed/partitioned by the key so the exchange is elided.
 """
 
@@ -47,26 +47,3 @@ def dedup_latest(
     w = Window.partitionBy(*keys).orderBy(*ordering)
     out = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
     return out.drop("__rn")
-
-
-def dedup_exact(
-    df: DataFrame,
-    on: Sequence[str],
-    canonical_order: Sequence[str] | None = None,
-) -> DataFrame:
-    """Exact duplicate removal over ``on`` columns.
-
-    With ``canonical_order`` the survivor is deterministic (the row
-    minimizing those columns); without it this is ``dropDuplicates``
-    (arbitrary survivor — fine when the duplicate rows are identical).
-    Single shuffle on the dedup key either way.
-    """
-    if canonical_order is None:
-        return df.dropDuplicates(list(on))
-    ordering = [F.col(c).asc() for c in canonical_order]
-    w = Window.partitionBy(*on).orderBy(*ordering)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )

@@ -5,11 +5,10 @@ unique_key='transaction_id'`` (``fact_transactions.sql:1``): first run
 CTAS, later runs upsert the batch, with MERGE-on-unique-key making
 retries idempotent (``readme.md:704-705``).
 
-Parquet-friendly implementation: fold the batch to one row per key,
-then ``target anti-join batch ⊎ batch`` — exactly MERGE semantics
-(matched rows replaced, unmatched inserted). Both sides shuffle by the
-unique key, so at scale bucket the target by that key to elide its
-exchange.
+Parquet-friendly implementation: one keyed merge, ``target ⊎ batch``
+folded to the newest row per key — MERGE semantics (matched rows
+replaced, unmatched inserted) with ONE shuffle on the unique key. At
+scale, bucket the target by that key to elide its side of the exchange.
 """
 
 from __future__ import annotations
@@ -28,35 +27,21 @@ def incremental_merge(
     unique_key: str,
     order_by: Sequence[str] = (),
 ) -> DataFrame:
-    """Upsert ``batch`` into ``target`` on ``unique_key``.
-
-    ``order_by`` names recency columns present in both frames. Without
-    it, batch rows replace matched target rows (anti-join ⊎ batch).
-    With it, multi-image batches fold to their latest row (at-least-once
-    redelivery safe — idempotent by construction) and the merge is
-    recency-aware ACROSS batches too: a stale image redelivered in a
-    later batch (past any watermark-dedup TTL) cannot overwrite a newer
-    target row. Ties prefer the batch row (idempotent re-application of
-    the same batch).
+    """Upsert ``batch`` into ``target`` on ``unique_key``: target rows
+    (``_src=0``) and batch rows (``_src=1``) fold to the newest row per
+    key by ``order_by`` (recency columns present in both frames), then
+    ``_src``. So a multi-image batch keeps its latest image, a stale
+    image redelivered in a later batch (past any watermark-dedup TTL)
+    cannot overwrite a newer target row, and ties prefer the batch row
+    (re-applying a batch is idempotent). With no ``order_by`` the batch
+    wins every matched key. Null-key rows collapse to one row.
     """
-    if order_by:
-        batch = dedup_latest(batch, [unique_key], order_by)
-    else:
-        batch = batch.dropDuplicates([unique_key])
-    if target is None:
-        return batch
-    if order_by:
-        # union ⊎ dedup-latest: same single key-shuffle as the anti-join
-        # shape, but matched rows resolve by recency instead of blind
-        # batch-wins replacement. `_src` breaks exact-recency ties in the
-        # batch's favor.
-        tagged = (
-            target.withColumn("_src", F.lit(0))
-            .unionByName(batch.select(*target.columns).withColumn("_src", F.lit(1)))
+    merged = batch.withColumn("_src", F.lit(1))
+    if target is not None:
+        merged = target.withColumn("_src", F.lit(0)).unionByName(
+            merged.select(*target.columns, "_src")
         )
-        return dedup_latest(tagged, [unique_key], [*order_by, "_src"]).drop("_src")
-    kept = target.join(batch.select(unique_key), unique_key, "left_anti")
-    return kept.unionByName(batch.select(*target.columns))
+    return dedup_latest(merged, [unique_key], [*order_by, "_src"]).drop("_src")
 
 
 # Aggregate-maintenance: measures whose partial states compose by

@@ -119,9 +119,13 @@ def scd2_merge_images(
     Mechanics: union the open snapshot versions (as images effective at
     their ``valid_from``, ranked before same-instant batch images) with
     the batch, replay per key via :func:`scd2_from_change_log`, and
-    reattach the immutable closed history. Redelivered duplicates
-    collapse as no-op images (idempotent); a no-op first batch image
-    keeps the open version's original ``valid_from``.
+    reattach the immutable closed history. A redelivered image equal to
+    the open version collapses as a no-op (a no-op first batch image
+    keeps the open version's original ``valid_from``), so replaying a
+    batch with ONE image per key is idempotent. Replaying a batch with
+    several images per key is NOT: its earlier images are already
+    closed versions, which this merge does not compare against, so
+    each replay duplicates them (ROADMAP open item 1, Defect 1).
 
     Late images older than an already-*closed* version are chained
     relative to the open version only — rewriting closed history would

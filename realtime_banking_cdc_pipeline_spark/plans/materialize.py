@@ -1,7 +1,7 @@
 """Incremental materialization (C5 in SURVEY.md §2.7): dbt's
-``materialized='incremental'`` mapped to Spark — anti-join ⊎ batch merge
-on a unique key, persisted through the staged swap
-(``fact_transactions.sql:1``).
+``materialized='incremental'`` mapped to Spark — the keyed union ⊎
+dedup merge of ``incremental_merge`` on a unique key, read and written
+through the staged swap (``fact_transactions.sql:1``).
 """
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.incremental import incremental_merge
-from ..sources.parquet_io import recover_swap, write_staged
+from ..sources.parquet_io import read_staged, write_staged
 
 
 def materialize_incremental(
@@ -17,14 +17,11 @@ def materialize_incremental(
     batch: DataFrame,
     path: str,
     unique_key: str,
-) -> DataFrame:
+) -> None:
     """First run CTAS, then merge-on-unique-key — dbt incremental
-    semantics on plain parquet (idempotent under redelivery), written
-    through ``write_staged``. A swap interrupted by a crash is repaired
-    first, so the merge never restarts from an empty target."""
-    target = None
-    if recover_swap(spark, path) != "missing":
-        target = spark.read.parquet(path)
-    merged = incremental_merge(target, batch, unique_key)
+    semantics on plain parquet (idempotent under redelivery). The
+    target is read and rewritten through the staged swap, so a crash
+    mid-write never restarts the merge from an empty target. Returns
+    nothing: read ``path`` back to query the table."""
+    merged = incremental_merge(read_staged(spark, path), batch, unique_key)
     write_staged(merged, path)
-    return spark.read.parquet(path)

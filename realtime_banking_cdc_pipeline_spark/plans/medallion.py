@@ -24,7 +24,7 @@ from ..operators.quality import (
 from ..operators.scd2 import scd2_merge_images
 from ..schemas import SCD2_CHECK_COLS, TABLE_SCHEMAS
 from ..sources.cdc import parse_envelope, to_bronze_rows
-from ..sources.parquet_io import recover_swap, write_staged
+from ..sources.parquet_io import read_staged, write_staged
 from .gold import build_dim, build_fact_transactions
 from .silver import stg_accounts, stg_customers, stg_transactions
 
@@ -58,16 +58,12 @@ class MedallionState:
     @classmethod
     def load(cls, spark: SparkSession, base_dir: str) -> "MedallionState":
         """Read back what ``save`` wrote. A table whose swap was cut
-        between its two renames is repaired first (``recover_swap``), so
+        between its two renames is repaired first (``read_staged``), so
         a crash mid-save never reads as a first run."""
         state = cls.empty()
         for table in state.snapshots:
-            p = f"{base_dir}/snapshot_{table}"
-            if recover_swap(spark, p) != "missing":
-                state.snapshots[table] = spark.read.parquet(p)
-        p = f"{base_dir}/fact_state"
-        if recover_swap(spark, p) != "missing":
-            state.fact = spark.read.parquet(p)
+            state.snapshots[table] = read_staged(spark, f"{base_dir}/snapshot_{table}")
+        state.fact = read_staged(spark, f"{base_dir}/fact_state")
         return state
 
 

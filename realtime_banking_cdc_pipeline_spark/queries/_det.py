@@ -20,14 +20,23 @@ def events_table(spark, sf_dir: str):
     parquet reader rejects ([PARQUET_TYPE_ILLEGAL]). Reading them as
     raw ns longs (``nanosAsLong``) and converting to µs is exact for
     this data (the driver generates µs-granular values; DuckDB's
-    TIMESTAMP oracle view truncates to µs identically).
+    TIMESTAMP oracle view truncates to µs identically). The setting is
+    undone once the schema is resolved, so it does not leak into the
+    session's later parquet reads.
     """
     from pyspark.sql import functions as F  # noqa: F811
     from ..sources.parquet_io import read_table
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = read_table(spark, sf_dir, "events")
-    ts_type = dict(ev.dtypes)["ts"]
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        ev = read_table(spark, sf_dir, "events")
+        ts_type = dict(ev.dtypes)["ts"]
+    finally:
+        spark.conf.unset(key)
+        if prior is not None:
+            spark.conf.set(key, prior)
     if ts_type == "bigint":
         # integer div — `/` would go through double and lose ns precision
         ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

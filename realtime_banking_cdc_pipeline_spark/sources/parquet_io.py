@@ -103,6 +103,15 @@ def swap_into_place(spark: SparkSession, staging: str, path: str) -> None:
     fs.delete(hold, True)
 
 
+def read_staged(spark: SparkSession, path: str) -> DataFrame | None:
+    """The read side of ``write_staged``: repair an interrupted swap
+    first, so a crash mid-write never reads as an absent table; None
+    when nothing was ever written."""
+    if recover_swap(spark, path) == "missing":
+        return None
+    return spark.read.parquet(path)
+
+
 def recover_swap(spark: SparkSession, path: str) -> str:
     """Repair an interrupted ``swap_into_place``. Returns what happened:
     ``"intact"`` (target present — leftover staging/old cleaned),

@@ -167,19 +167,20 @@ def pipeline_batch(
     meaningful, with any residual laziness landing in the next stage.
 
     Checkpoint hygiene (r14): the batch's INTERNAL localCheckpoints
-    (raw batch, per-gate survivor frames) are scope-released before
-    return — across a 20-epoch 2M-doc run they used to accumulate as
-    unreclaimable storage blocks until the ContextCleaner got to them.
-    The RETURNED survivors frame is checkpointed via
-    ``survivor_scope`` when the caller passes a
+    (raw batch, per-gate survivor frames, the verdicts the store stages
+    return) are scope-released before return — across a 20-epoch
+    2M-doc run they used to accumulate as unreclaimable storage blocks
+    until the ContextCleaner got to them. The RETURNED survivors frame
+    is checkpointed via ``survivor_scope`` when the caller passes a
     ``caching.CheckpointScope`` (the streaming wrapper does, releasing
-    it after the on_batch hook), else plain.
+    it after the on_batch hook), else via ``track_local_checkpoint``
+    for the host's ``release_caches``.
 
     Each stage also runs under a Spark job group
     ``pipe:e<epoch>:<stage>`` so the probes can attribute per-stage
     input/shuffle bytes from the UI status store (r13 judge
     directive #4)."""
-    from ..caching import CheckpointScope
+    from ..caching import CheckpointScope, track_local_checkpoint
     from ..queries.round7 import _merge_anchor_islands
 
     p = _paths(root)
@@ -443,6 +444,7 @@ def pipeline_batch(
             .select("doc_id", "text", "embedding", *extra_cols)
         )
         surv1 = scope.ckpt(surv1)
+        scope.adopt(kept_k)
         mark("paragraph", t0)
 
 
@@ -480,7 +482,7 @@ def pipeline_batch(
     survivors = (
         survivor_scope.ckpt(survivors)
         if survivor_scope is not None
-        else survivors.localCheckpoint(eager=True)
+        else track_local_checkpoint(survivors)
     )
     survivors.select("doc_id").write.mode("overwrite").parquet(
         os.path.join(p["out"], "survivors", f"epoch={e}")
@@ -696,6 +698,7 @@ def pipeline_batch(
                 n=int(plan_sample_per_epoch),
             )
             mark("sample", t0)
+    scope.adopt(flags, anchors, surv2_ids, kept_vecs)
     scope.release()  # internal frames fully consumed (funnel + monitors)
     if sc is not None:
         try:

@@ -55,6 +55,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import CheckpointScope
 from ..functions.similarity import cosine_against, fx_dot
 from .corpus import (
     _compact_store,
@@ -261,6 +262,7 @@ def semantic_ingest_batch(
     only match is a non-anchor, never false-drop. Replay-safe: the
     anchor head-count excludes the replayed epoch's own partition."""
     spark = batch_emb.sparkSession
+    scope = CheckpointScope()
     if not os.path.exists(os.path.join(_codebook_dir(codebook_path), "fine")):
         train_codebook(batch_emb, codebook_path)
     m = (
@@ -290,9 +292,7 @@ def semantic_ingest_batch(
             # the store files this batch later overwrites (the same
             # recompute-on-eviction guard the survivors frame gets)
             head = F.broadcast(
-                store.groupBy("cid")
-                .agg(F.count("*").alias("__head"))
-                .localCheckpoint(eager=True)
+                scope.ckpt(store.groupBy("cid").agg(F.count("*").alias("__head")))
             )
             m = m.join(head, "cid", "left").withColumn(
                 "__head", F.coalesce(F.col("__head"), F.lit(0))
@@ -357,6 +357,7 @@ def semantic_ingest_batch(
     else:
         out.write.mode("append").partitionBy("bucket").parquet(store_path)
     m.unpersist()
+    scope.release()  # head: the verdict and the store write are done
     return survivors
 
 

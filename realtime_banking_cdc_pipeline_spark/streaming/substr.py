@@ -78,6 +78,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import CheckpointScope
 from ..queries.round7 import _XSUB_K
 from .corpus import (
     _compact_store,
@@ -163,7 +164,8 @@ def ingest_substr_batch(
     (doc_id, p) whose boilerplate verdict this batch decides. Pure
     DataFrame logic; epoch partitions make replays idempotent."""
     spark = batch_docs.sparkSession
-    ng = batch_shingles(batch_docs).localCheckpoint(eager=True)
+    scope = CheckpointScope()
+    ng = scope.ckpt(batch_shingles(batch_docs))
     cnt_b = _with_bucket(
         ng.groupBy(*_G_COLS).agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -281,6 +283,7 @@ def ingest_substr_batch(
     ).write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(pos_path, f"epoch={int(epoch_id)}")
     )
+    scope.release()  # ng: emitted is checkpointed, both writes durable
     return emitted
 
 

@@ -13,6 +13,10 @@ from realtime_banking_cdc_pipeline_spark.operators.scd2 import (
     scd2_apply,
     scd2_from_change_log,
 )
+from realtime_banking_cdc_pipeline_spark.plans.plan_checks import (
+    join_count,
+    shuffle_count,
+)
 
 T0 = dt.datetime(2024, 1, 1)
 
@@ -112,10 +116,17 @@ def test_incremental_merge_upsert_and_idempotency(spark):
     t1 = T0 + dt.timedelta(hours=1)
     batch = _rows(spark, [(2, "b2", t1, 3), (3, "c", t1, 4)])
     merged = incremental_merge(target, batch, "id", order_by=["ts", "seq"])
+    # one keyed merge: target and batch meet in a single exchange on the
+    # key (counted before execution: an executed plan lists it twice)
+    assert shuffle_count(merged) == 1
     out = {r["id"]: r["v"] for r in merged.collect()}
     assert out == {1: "a", 2: "b2", 3: "c"}
     again = incremental_merge(merged, batch, "id", order_by=["ts", "seq"])
     assert {r["id"]: r["v"] for r in again.collect()} == out
+    # the unordered (batch-wins) merge is the same fold: no join
+    blind = incremental_merge(target, batch, "id")
+    assert join_count(blind) == 0
+    assert {r["id"]: r["v"] for r in blind.collect()} == out
 
 
 def test_connected_components_chain_and_isolated(spark):
@@ -483,3 +494,34 @@ def test_connected_components_live_checkpoints_o1_in_rounds(spark):
     assert {r["component"] for r in got.collect()} == {0}
     caching.release_caches()
     assert jsc.getPersistentRDDs().size() == base
+
+
+def test_events_table_scopes_nanos_as_long(spark, tmp_path):
+    """A ns-precision ``events.parquet`` reads as exact µs timestamps,
+    and the ``nanosAsLong`` setting the read needs does not outlive it
+    (it used to leak into every later parquet read in the session)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from realtime_banking_cdc_pipeline_spark.queries._det import events_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    ns = [1_700_000_000_123_456_000, 1_700_000_001_000_001_000, 5_000]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    ev = events_table(spark, str(tmp_path))
+    assert spark.conf.get(key, None) == before
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    got = [
+        r["us"]
+        for r in ev.orderBy("event_id").select(F.unix_micros("ts").alias("us")).collect()
+    ]
+    assert got == [v // 1000 for v in ns]

@@ -300,7 +300,13 @@ def test_pipeline_skip_paragraph_stage(spark, tmp_path):
     five-stage r9/r10 chain — used to crash with UnboundLocalError at
     the near-dup gate because its kwargs were assigned inside the
     paragraph block. Pin that the skip path runs end-to-end, still
-    kills each plant at its stage, and writes no paragraph accounting."""
+    kills each plant at its stage, and writes no paragraph accounting.
+    Called without a ``survivor_scope``, the batches leave no checkpoint
+    behind once the host runs ``release_caches``."""
+    from realtime_banking_cdc_pipeline_spark.caching import release_caches
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    n_start = persistent().size()
     rows = _base_rows(spark)
     plants = _planted(rows)
     root = str(tmp_path / "root")
@@ -329,6 +335,8 @@ def test_pipeline_skip_paragraph_stage(spark, tmp_path):
     assert 1003 not in ids and 1006 not in ids and 1010 not in ids
     assert {3, 6, 10, 39} <= ids
     assert not os.path.exists(os.path.join(_paths(root)["out"], "paragraph"))
+    release_caches()
+    assert persistent().size() == n_start
 
 
 def test_pipeline_zero_block_doc_accounting(spark, tmp_path):
