@@ -1,7 +1,8 @@
 """Incremental materialization (C5 in SURVEY.md §2.7): dbt's
 ``materialized='incremental'`` mapped to Spark — the keyed union ⊎
-dedup merge of ``incremental_merge`` on a unique key, read and written
-through the staged swap (``fact_transactions.sql:1``).
+dedup merge of ``incremental_merge`` on a unique key, read with
+``read_staged`` and committed with ``write_staged``
+(``fact_transactions.sql:1``).
 """
 
 from __future__ import annotations
@@ -20,8 +21,8 @@ def materialize_incremental(
 ) -> None:
     """First run CTAS, then merge-on-unique-key — dbt incremental
     semantics on plain parquet (idempotent under redelivery). The
-    target is read and rewritten through the staged swap, so a crash
-    mid-write never restarts the merge from an empty target. Returns
+    target is rewritten by a staged commit, so a crash mid-write
+    leaves the old or the new table, never an empty one. Returns
     nothing: read ``path`` back to query the table."""
     merged = incremental_merge(read_staged(spark, path), batch, unique_key)
-    write_staged(merged, path)
+    write_staged(path, {"": merged})

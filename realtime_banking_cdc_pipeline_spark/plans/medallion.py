@@ -35,7 +35,9 @@ class MedallionState:
     SCD2 snapshots and the audit-bearing fact through parquet so a
     restarted job resumes with full version history — without this,
     rebuilding from ``empty()`` silently drops all pre-restart dim
-    versions."""
+    versions. The three tables are committed together
+    (``write_staged``), so a crash mid-save loads the previous batch's
+    state whole, never a mix of two batches."""
 
     snapshots: dict[str, DataFrame | None]
     fact: DataFrame | None
@@ -45,25 +47,21 @@ class MedallionState:
         return cls(snapshots={"customers": None, "accounts": None}, fact=None)
 
     def save(self, base_dir: str) -> None:
-        """Persist fact + snapshots (staged writes: the loaded
-        DataFrames' lineage reads these same paths). The fact saves
-        FIRST — its lineage joins the accounts snapshot, whose cached
-        file listing dies the moment snapshot_accounts is overwritten."""
-        if self.fact is not None:
-            write_staged(self.fact, f"{base_dir}/fact_state")
-        for table, snap in self.snapshots.items():
-            if snap is not None:
-                write_staged(snap, f"{base_dir}/snapshot_{table}")
+        """Persist fact + snapshots as one staged commit (the loaded
+        DataFrames' lineage reads these same paths)."""
+        tables = {"fact_state": self.fact}
+        tables.update((f"snapshot_{t}", snap) for t, snap in self.snapshots.items())
+        write_staged(base_dir, {n: df for n, df in tables.items() if df is not None})
 
     @classmethod
     def load(cls, spark: SparkSession, base_dir: str) -> "MedallionState":
-        """Read back what ``save`` wrote. A table whose swap was cut
-        between its two renames is repaired first (``read_staged``), so
-        a crash mid-save never reads as a first run."""
+        """Read back what ``save`` committed; an interrupted save is
+        finished or dropped first (``read_staged``), so a crash mid-save
+        never reads as a first run."""
         state = cls.empty()
         for table in state.snapshots:
-            state.snapshots[table] = read_staged(spark, f"{base_dir}/snapshot_{table}")
-        state.fact = read_staged(spark, f"{base_dir}/fact_state")
+            state.snapshots[table] = read_staged(spark, base_dir, f"snapshot_{table}")
+        state.fact = read_staged(spark, base_dir, "fact_state")
         return state
 
 

@@ -65,27 +65,35 @@ def assert_pruned_scan(df: DataFrame, table_cols: int, max_read_cols: int) -> No
                 )
 
 
+def _planned_lines(df: DataFrame) -> list[str]:
+    """The formatted plan without AQE's "Final Plan" subtrees. Once a
+    frame has run, AQE prints its final plan and then its initial plan,
+    so every operator would count twice; the initial plan is the one
+    printed before execution, so a count reads the same either way."""
+    out, skip = [], None
+    for line in _formatted_plan(df).splitlines():
+        col = len(line) - len(line.lstrip(" :+-*"))
+        if skip is not None and line.strip() and col >= skip and "== Initial Plan ==" not in line:
+            continue
+        skip = col if "== Final Plan ==" in line else None
+        out.append(line)
+    return out
+
+
 def join_count(df: DataFrame) -> int:
     """Number of physical join operators — catches accidental per-band /
     per-table join loops that re-evaluate shared subtrees."""
     import re
 
-    plan = _formatted_plan(df)
-    return len(
-        re.findall(
-            r"^\(\d+\)\s+\w*(?:HashJoin|SortMergeJoin|NestedLoopJoin)",
-            plan,
-            re.MULTILINE,
-        )
-    )
+    join = re.compile(r"^[\s:+\-*]*\w*(?:HashJoin|SortMergeJoin|NestedLoopJoin)\b")
+    return sum(1 for line in _planned_lines(df) if join.match(line))
 
 
 def shuffle_count(df: DataFrame) -> int:
     """Number of exchanges in the physical plan — the metric to minimize."""
-    plan = _formatted_plan(df)
     return sum(
         1
-        for line in plan.splitlines()
+        for line in _planned_lines(df)
         if line.strip().startswith("+- Exchange") or line.strip().startswith(":- Exchange")
         or "(Exchange" in line or line.strip().startswith("Exchange")
     )

@@ -25,7 +25,6 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
     max_records_per_file: int | None = None,
 ) -> None:
     """Partitioned parquet sink (reference S5: ``{table}/date=.../*.parquet``).
@@ -35,7 +34,7 @@ def write_partitioned(
     time exactly like the reference's Snowflake clustering keys
     (readme.md:134-140).
     """
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     if max_records_per_file:
@@ -49,96 +48,76 @@ def compact_parquet(
     """Rewrite a parquet table into ⌈rows / target⌉ evenly-sized files —
     the maintenance pass every incremental sink needs (per-batch appends
     accumulate small files; small files mean per-file open/footer costs
-    dominate scans and executors starve on tiny splits). The read and
-    the rewrite share ``path``, so it goes through ``write_staged``.
-    Returns the resulting file count. On Delta/Iceberg this is
-    OPTIMIZE; here it is the same operation on plain parquet."""
-    df = spark.read.parquet(path)
+    dominate scans and executors starve on tiny splits). The table is
+    read with ``read_staged`` (so a committed, unpromoted rewrite is
+    finished rather than dropped) and rewritten with ``write_staged``,
+    because the read and the rewrite share ``path``. Returns the
+    resulting file count. On Delta/Iceberg this is OPTIMIZE; here it is
+    the same operation on plain parquet."""
+    df = read_staged(spark, path)
     n = df.count()
     files = max(1, -(-n // target_records_per_file))
-    write_staged(df.repartition(files), path)
+    write_staged(path, {"": df.repartition(files)})
     return files
 
 
-def _fs(spark: SparkSession, path: str):
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+def _fs(spark: SparkSession, path: str, *more: str):
+    """The Hadoop FileSystem of ``path``, then the Hadoop Paths of
+    ``path`` and each of ``more``."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    hpaths = [Path(p) for p in (path, *more)]
+    return (hpaths[0].getFileSystem(spark._jsc.hadoopConfiguration()), *hpaths)
 
 
-def write_staged(df: DataFrame, path: str) -> None:
-    """The one way a durable table is (re)written: write ``df`` to
-    ``<path>__staging``, then promote it with ``swap_into_place``. A
-    frame whose lineage READS ``path`` cannot overwrite it in place,
-    and an in-place overwrite truncates the target if it crashes."""
+def write_staged(path: str, tables: dict[str, DataFrame]) -> None:
+    """The one way durable tables are (re)written: commit ``tables`` as
+    one unit. Each frame is written to ``<path>__staging/<name>`` (the
+    name ``""`` is the staging dir itself: one flat table); after the
+    last write ``<path>__staging/_SUCCESS`` marks the set committed, and
+    only then is ``path`` deleted and the staging dir renamed to it.
+    Frames whose lineage READS ``path`` are therefore safe in any order,
+    and a crash leaves the old set or a committed new one
+    (``recover_swap``), never a mix. Renames are atomic metadata ops on
+    HDFS/local/ABFS; on S3 "rename" is copy+delete, so there a
+    transactional table format (Delta/Iceberg) is the real answer."""
+    if not tables:
+        return
+    spark = next(iter(tables.values())).sparkSession
     staging = path.rstrip("/") + "__staging"
-    df.write.mode("overwrite").parquet(staging)
-    swap_into_place(df.sparkSession, staging, path)
+    fs, hstaging, hmarker = _fs(spark, staging, staging + "/_SUCCESS")
+    fs.delete(hstaging, True)  # the uncommitted leftover of a crashed write
+    for name, df in tables.items():
+        df.write.mode("overwrite").parquet(f"{staging}/{name}" if name else staging)
+    fs.create(hmarker, True).close()
+    recover_swap(spark, path)  # promote the committed set
 
 
-def swap_into_place(spark: SparkSession, staging: str, path: str) -> None:
-    """Promote a fully-written ``staging`` dir to ``path`` via two
-    renames, keeping the previous table as ``<path>__old`` until the
-    new one is in place — replaces the overwrite-in-place rewrite whose
-    crash window TRUNCATED the target (r2 advisor finding).
-
-    Crash matrix: before the first rename the old table is untouched;
-    between the renames the path is briefly absent but BOTH copies
-    exist on disk; after the second rename the swap is durable and
-    ``__old`` is garbage. ``recover_swap`` repairs every intermediate
-    state. Renames are atomic metadata ops on HDFS/local/ABFS; on S3
-    "rename" is copy+delete, so there a transactional table format
-    (Delta/Iceberg) is the real answer."""
-    fs, hstaging = _fs(spark, staging)
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    hold = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    fs.delete(hold, True)
-    had_old = fs.exists(hpath)
-    if had_old and not fs.rename(hpath, hold):
-        raise IOError(f"swap: could not retire {path}")
-    if not fs.rename(hstaging, hpath):
-        # put the old table back rather than leaving the path empty
-        if had_old:
-            fs.rename(hold, hpath)
-        raise IOError(f"swap: could not promote {staging} to {path}")
-    fs.delete(hold, True)
-
-
-def read_staged(spark: SparkSession, path: str) -> DataFrame | None:
-    """The read side of ``write_staged``: repair an interrupted swap
-    first, so a crash mid-write never reads as an absent table; None
-    when nothing was ever written."""
-    if recover_swap(spark, path) == "missing":
-        return None
-    return spark.read.parquet(path)
+def read_staged(spark: SparkSession, path: str, name: str = "") -> DataFrame | None:
+    """The read side of ``write_staged``: finish or drop an interrupted
+    write first, then read table ``name`` of ``path``; None when that
+    table was never written."""
+    recover_swap(spark, path)
+    table = f"{path}/{name}" if name else path
+    fs, htable = _fs(spark, table)
+    return spark.read.parquet(table) if fs.exists(htable) else None
 
 
 def recover_swap(spark: SparkSession, path: str) -> str:
-    """Repair an interrupted ``swap_into_place``. Returns what happened:
-    ``"intact"`` (target present — leftover staging/old cleaned),
-    ``"promoted_staging"`` (crash between renames; the NEW data was
-    complete, promote it), ``"restored_old"`` (staging incomplete or
-    missing; old table restored), or ``"missing"`` (nothing to recover).
+    """Repair an interrupted ``write_staged``. Returns what happened:
+    ``"promoted_staging"`` (the staging dir carries ``_SUCCESS``, so
+    every table in it is complete: the promotion is finished, whatever
+    is left of ``path``); otherwise any partial staging is dropped and
+    the result is ``"intact"`` (``path`` present) or ``"missing"``.
     Idempotent — safe to call at every job start."""
-    fs, hpath = _fs(spark, path)
-    hstaging = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__staging")
-    hold = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    if fs.exists(hpath):
-        fs.delete(hstaging, True)
-        fs.delete(hold, True)
-        return "intact"
-    # a staging dir is only promotable if its write COMMITTED (_SUCCESS)
-    hsuccess = spark._jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + "__staging/_SUCCESS"
-    )
-    if fs.exists(hstaging) and fs.exists(hsuccess):
-        fs.rename(hstaging, hpath)
-        fs.delete(hold, True)
+    staging = path.rstrip("/") + "__staging"
+    fs, hpath, hstaging, hmarker = _fs(spark, path, staging, staging + "/_SUCCESS")
+    if fs.exists(hmarker):
+        fs.delete(hpath, True)
+        if not fs.rename(hstaging, hpath):
+            raise IOError(f"could not promote {staging} to {path}")
         return "promoted_staging"
-    if fs.exists(hold):
-        fs.rename(hold, hpath)
-        fs.delete(hstaging, True)
-        return "restored_old"
-    return "missing"
+    fs.delete(hstaging, True)
+    return "intact" if fs.exists(hpath) else "missing"
 
 
 def read_csv_tolerant(

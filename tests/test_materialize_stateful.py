@@ -34,50 +34,102 @@ def test_view_table_incremental_cycle(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_load_repairs_interrupted_swap(spark, fixture_frames, tmp_path):
-    """A crash between the two renames of ``swap_into_place`` leaves a
-    state table absent with its data beside it (``__old``, or a
-    committed ``__staging``). ``MedallionState.load`` must repair the
-    swap and load the saved rows, not start that table from empty."""
-    import os
+_STATE_TABLES = ("fact_state", "snapshot_customers", "snapshot_accounts")
 
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def _saved_rows(spark, d):
+    return {t: _rows(spark.read.parquet(f"{d}/{t}")) for t in _STATE_TABLES}
+
+
+def _loaded_rows(state):
+    tables = {"fact_state": state.fact}
+    tables.update((f"snapshot_{t}", df) for t, df in state.snapshots.items())
+    return {t: df if df is None else _rows(df) for t, df in tables.items()}
+
+
+def _two_saves(spark, fixture_frames, first_dir, second_dir=None):
+    """Run the fixture in two halves (split on the envelope lsn), saving
+    the first half's state to ``first_dir``; return the second half's
+    state, also saved to ``second_dir`` when one is given."""
     from realtime_banking_cdc_pipeline_spark.plans.medallion import (
         MedallionState,
         run_pipeline,
     )
 
-    saved = str(tmp_path / "saved")
-    state, _ = run_pipeline(spark, fixture_frames)
-    state.save(saved)
+    lsn = F.get_json_object("value", "$.payload.source.lsn").cast("long")
+    half = fixture_frames.count() // 2
+    state, _ = run_pipeline(spark, fixture_frames.filter(lsn <= half))
+    state.save(first_dir)
+    state, _ = run_pipeline(
+        spark, fixture_frames.filter(lsn > half), state=MedallionState.load(spark, first_dir)
+    )
+    if second_dir:
+        state.save(second_dir)
+    return state
 
-    def rows(df):
-        return sorted(map(repr, df.collect()))
 
-    want = {
-        t: rows(spark.read.parquet(f"{saved}/{t}"))
-        for t in ("snapshot_accounts", "fact_state")
-    }
+def test_load_repairs_interrupted_swap(spark, fixture_frames, tmp_path):
+    """A save cut after its staging commit (``<state>__staging/_SUCCESS``)
+    but before the promotion finished leaves ``<state>`` gone or
+    half-deleted: ``load`` finishes the promotion and returns the staged
+    rows of all three tables. A save cut before its commit leaves a
+    partial staging dir: ``load`` drops it and returns the saved rows."""
+    import os
 
-    # swap cut between its renames, no committed staging left: the
-    # retired copy is restored
-    d1 = str(tmp_path / "old_only")
-    shutil.copytree(saved, d1)
-    os.rename(f"{d1}/snapshot_accounts", f"{d1}/snapshot_accounts__old")
-    loaded = MedallionState.load(spark, d1)
-    assert loaded.snapshots["accounts"] is not None
-    assert rows(loaded.snapshots["accounts"]) == want["snapshot_accounts"]
-    assert not os.path.exists(f"{d1}/snapshot_accounts__old")
+    from realtime_banking_cdc_pipeline_spark.plans.medallion import MedallionState
 
-    # swap cut between its renames after the staging write committed:
-    # the new copy is promoted
-    d2 = str(tmp_path / "staged_only")
-    shutil.copytree(saved, d2)
-    os.rename(f"{d2}/fact_state", f"{d2}/fact_state__staging")
-    assert os.path.exists(f"{d2}/fact_state__staging/_SUCCESS")
-    loaded = MedallionState.load(spark, d2)
-    assert loaded.fact is not None
-    assert rows(loaded.fact) == want["fact_state"]
-    assert not os.path.exists(f"{d2}/fact_state__staging")
+    saved, nxt = str(tmp_path / "saved"), str(tmp_path / "next")
+    _two_saves(spark, fixture_frames, saved, nxt)
+    assert os.path.exists(f"{nxt}/_SUCCESS")
+    want_saved, want_next = _saved_rows(spark, saved), _saved_rows(spark, nxt)
+    assert want_saved != want_next
+
+    for i, cut in enumerate(("", "/snapshot_accounts")):
+        d = str(tmp_path / f"committed{i}")
+        shutil.copytree(saved, d)
+        shutil.copytree(nxt, f"{d}__staging")
+        shutil.rmtree(d + cut)  # the promotion's delete of <state>, cut short or not
+        assert _loaded_rows(MedallionState.load(spark, d)) == want_next
+        assert not os.path.exists(f"{d}__staging")
+
+    d = str(tmp_path / "partial")
+    shutil.copytree(saved, d)
+    shutil.copytree(f"{nxt}/fact_state", f"{d}__staging/fact_state")
+    assert _loaded_rows(MedallionState.load(spark, d)) == want_saved
+    assert not os.path.exists(f"{d}__staging")
+
+
+def test_save_is_all_or_nothing(spark, fixture_frames, tmp_path, monkeypatch):
+    """A save killed after some of its table writes leaves the previous
+    save whole: ``load`` returns the first half's rows for all three
+    tables, never the new fact beside the old snapshots."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from realtime_banking_cdc_pipeline_spark.plans.medallion import MedallionState
+
+    d = str(tmp_path / "state")
+    state = _two_saves(spark, fixture_frames, d)
+    want = _saved_rows(spark, d)
+    assert state.fact.count() > len(want["fact_state"])
+
+    write, calls = DataFrameWriter.parquet, []
+
+    def killed_on_second_table(self, path, *args, **kwargs):
+        calls.append(path)
+        if len(calls) == 2:
+            raise RuntimeError("killed mid-save")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", killed_on_second_table)
+    with pytest.raises(RuntimeError, match="killed mid-save"):
+        state.save(d)
+    monkeypatch.undo()
+    assert _loaded_rows(MedallionState.load(spark, d)) == want
 
 
 def _drain(q, done, timeout=120):
@@ -229,7 +281,6 @@ def test_compact_parquet_reduces_file_count(spark, tmp_path):
     assert after_files == 3 < before_files
     assert sorted(r["id"] for r in spark.read.parquet(p).collect()) == before
     assert not glob.glob(f"{p}__staging*")  # staging cleaned up
-    assert not glob.glob(f"{p}__old*")  # retired copy cleaned up
 
 
 def test_gen_sf_amplification_preserves_structure(tmp_path):
@@ -286,44 +337,60 @@ def test_gen_sf_amplification_preserves_structure(tmp_path):
 
 
 def test_swap_recovery_from_every_interrupted_state(spark, tmp_path):
-    """Rename-based table swap: a crash at any point between staging
-    write and final promotion is repairable — the old or new table is
-    always intact on disk (r2 advisor: the overwrite-in-place rewrite
-    could truncate the target)."""
-    import shutil
+    """``write_staged`` publishes a set of tables with one marker and one
+    rename, so a crash at any point is repairable: the old set or the
+    committed new one is always whole on disk."""
+    import os
 
+    from realtime_banking_cdc_pipeline_spark.plans.medallion import MedallionState
     from realtime_banking_cdc_pipeline_spark.sources.parquet_io import (
+        read_staged,
         recover_swap,
-        swap_into_place,
+        write_staged,
     )
 
     p = str(tmp_path / "t")
+    staging = p + "__staging"
 
-    def reset(rows):
-        shutil.rmtree(p, ignore_errors=True)
-        spark.range(rows).write.mode("overwrite").parquet(p)
+    def staged(rows, committed=True):
+        spark.range(rows).write.parquet(f"{staging}/a")
+        if committed:
+            open(f"{staging}/_SUCCESS", "w").close()
 
-    # happy path: staging promotes, old copy gone
-    reset(10)
-    spark.range(100, 120).write.parquet(p + "__staging")
-    swap_into_place(spark, p + "__staging", p)
-    assert spark.read.parquet(p).count() == 20
+    def count(name):
+        return spark.read.parquet(f"{p}/{name}").count()
+
+    # happy path: both tables and the root marker land, staging is gone
+    write_staged(p, {"a": spark.range(10), "b": spark.range(5)})
+    assert (count("a"), count("b")) == (10, 5)
+    assert os.path.exists(f"{p}/_SUCCESS") and not os.path.exists(staging)
     assert recover_swap(spark, p) == "intact"
 
-    # crash BETWEEN the two renames: path absent, old + committed
-    # staging both present -> the new data wins
-    spark.range(200, 230).write.parquet(p + "__staging")
-    shutil.move(p, p + "__old")
+    # committed staging, path still present (cut before the delete): the
+    # committed set replaces the whole old set
+    staged(20)
     assert recover_swap(spark, p) == "promoted_staging"
-    assert spark.read.parquet(p).count() == 30
+    assert count("a") == 20 and read_staged(spark, p, "b") is None
 
-    # crash DURING the staging write (no _SUCCESS): old table restored
-    spark.range(300, 305).write.parquet(p + "__staging")
-    (tmp_path / "t__staging" / "_SUCCESS").unlink()
-    shutil.move(p, p + "__old")
-    assert recover_swap(spark, p) == "restored_old"
-    assert spark.read.parquet(p).count() == 30
+    # committed staging, path half-deleted, then gone
+    staged(30)
+    shutil.rmtree(f"{p}/a")
+    assert recover_swap(spark, p) == "promoted_staging"
+    assert count("a") == 30
+    staged(40)
+    shutil.rmtree(p)
+    assert recover_swap(spark, p) == "promoted_staging"
+    assert count("a") == 40
 
-    # nothing anywhere
+    # staging cut during its writes (no _SUCCESS): dropped, old set intact
+    staged(50, committed=False)
+    assert recover_swap(spark, p) == "intact"
+    assert count("a") == 40 and not os.path.exists(staging)
+
+    # nothing anywhere; saving nothing writes nothing
     shutil.rmtree(p)
     assert recover_swap(spark, p) == "missing"
+    assert read_staged(spark, p) is None
+    write_staged(p, {})
+    MedallionState.empty().save(p)
+    assert not os.path.exists(p) and not os.path.exists(staging)

@@ -129,6 +129,29 @@ def test_incremental_merge_upsert_and_idempotency(spark):
     assert {r["id"]: r["v"] for r in blind.collect()} == out
 
 
+def test_plan_counts_read_the_same_before_and_after_execution(spark):
+    """Once a frame has run, AQE prints its final plan beside its initial
+    one. The counters read one plan, so a pin holds whether it is read
+    before or after an action (a sort-merge join and an aggregate)."""
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        a = spark.range(100).selectExpr("id % 7 AS k", "id AS v")
+        b = spark.range(50).selectExpr("id % 7 AS k", "id AS w")
+        agg, smj = a.groupBy("k").count(), a.join(b, "k")
+        counts = {}
+        for name, df in (("agg", agg), ("smj", smj)):
+            before = (shuffle_count(df), join_count(df))
+            df.collect()
+            counts[name] = (before, (shuffle_count(df), join_count(df)))
+    finally:
+        spark.conf.set(threshold, prior)
+    assert counts["agg"] == ((1, 0), (1, 0))
+    (smj_before, smj_after) = counts["smj"]
+    assert smj_before == smj_after and smj_after[1] == 1
+
+
 def test_connected_components_chain_and_isolated(spark):
     """Min-label propagation: a 5-node chain (diameter > 1 round)
     collapses to its min id; isolated nodes from `nodes` self-label."""
