@@ -9,6 +9,8 @@ the scans; fail fast instead of discovering a 100 TB cartesian at 2am.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -80,20 +82,20 @@ def _planned_lines(df: DataFrame) -> list[str]:
     return out
 
 
+def _count_operators(df: DataFrame, operator: str) -> int:
+    """Initial-plan tree lines whose operator matches ``operator``,
+    whatever branch of the tree (``+-``, ``:-`` or a ``:`` continuation)
+    prints them."""
+    op = re.compile(rf"^[\s:+\-*]*(?:{operator})\b")
+    return sum(1 for line in _planned_lines(df) if op.match(line))
+
+
 def join_count(df: DataFrame) -> int:
     """Number of physical join operators — catches accidental per-band /
     per-table join loops that re-evaluate shared subtrees."""
-    import re
-
-    join = re.compile(r"^[\s:+\-*]*\w*(?:HashJoin|SortMergeJoin|NestedLoopJoin)\b")
-    return sum(1 for line in _planned_lines(df) if join.match(line))
+    return _count_operators(df, r"\w*(?:HashJoin|SortMergeJoin|NestedLoopJoin)")
 
 
 def shuffle_count(df: DataFrame) -> int:
     """Number of exchanges in the physical plan — the metric to minimize."""
-    return sum(
-        1
-        for line in _planned_lines(df)
-        if line.strip().startswith("+- Exchange") or line.strip().startswith(":- Exchange")
-        or "(Exchange" in line or line.strip().startswith("Exchange")
-    )
+    return _count_operators(df, "Exchange")

@@ -11,14 +11,58 @@ corrupt-record quarantine column.
 
 from __future__ import annotations
 
+import json
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# The session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# session -> {path: ((file stamp, *inference confs), resolved schema)}
+_schemas: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver testdata table (TESTDATA.md layout)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Read one driver testdata table (TESTDATA.md layout).
+
+    Inferring a parquet schema runs a Spark job (~70 ms a table), and a
+    query build reads several tables, so the session remembers each
+    resolved schema, keyed on the path, a stamp of its files (size and
+    mtime) and the confs inference depends on. A repeat read passes the
+    schema back (``spark.read.schema(s)``): no job, and a fresh relation
+    with fresh attribute ids, so a table joined with itself stays
+    unambiguous, as it would not with a memoized DataFrame."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = (_file_stamp(spark, path), *(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    known = _schemas.setdefault(spark, {})
+    if path in known and known[path][0] == key:
+        return spark.read.schema(known[path][1]).parquet(path)
+    df = spark.read.parquet(path)
+    known[path] = (key, df.schema)
+    return df
+
+
+def _file_stamp(spark: SparkSession, path: str) -> tuple:
+    """(name, size, mtime) of every file under ``path``: a rewrite of the
+    table changes it. (``listStatus``, not ``listFiles``: on the local
+    file system the latter also loads each file's permissions.)"""
+    fs, hpath = _fs(spark, path)
+    out, todo = [], [hpath]
+    while todo:
+        for st in fs.listStatus(todo.pop()):
+            if st.isDirectory():
+                todo.append(st.getPath())
+            else:
+                out.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(out))
 
 
 def write_partitioned(
@@ -73,7 +117,8 @@ def write_staged(path: str, tables: dict[str, DataFrame]) -> None:
     """The one way durable tables are (re)written: commit ``tables`` as
     one unit. Each frame is written to ``<path>__staging/<name>`` (the
     name ``""`` is the staging dir itself: one flat table); after the
-    last write ``<path>__staging/_SUCCESS`` marks the set committed, and
+    last write ``<path>__staging/_SUCCESS`` marks the set committed (it
+    holds each table's schema as JSON, for ``read_staged``), and
     only then is ``path`` deleted and the staging dir renamed to it.
     Frames whose lineage READS ``path`` are therefore safe in any order,
     and a crash leaves the old set or a committed new one
@@ -88,18 +133,40 @@ def write_staged(path: str, tables: dict[str, DataFrame]) -> None:
     fs.delete(hstaging, True)  # the uncommitted leftover of a crashed write
     for name, df in tables.items():
         df.write.mode("overwrite").parquet(f"{staging}/{name}" if name else staging)
-    fs.create(hmarker, True).close()
+    marker = fs.create(hmarker, True)
+    marker.write(json.dumps({n: df.schema.jsonValue() for n, df in tables.items()}).encode())
+    marker.close()
     recover_swap(spark, path)  # promote the committed set
 
 
 def read_staged(spark: SparkSession, path: str, name: str = "") -> DataFrame | None:
     """The read side of ``write_staged``: finish or drop an interrupted
     write first, then read table ``name`` of ``path``; None when that
-    table was never written."""
+    table was never written. The schema comes from the commit marker, so
+    the read runs no inference job; a table the marker does not describe
+    (an empty marker, as states committed before markers held schemas
+    have) is inferred from its files."""
     recover_swap(spark, path)
     table = f"{path}/{name}" if name else path
-    fs, htable = _fs(spark, table)
-    return spark.read.parquet(table) if fs.exists(htable) else None
+    fs, htable, hmarker = _fs(spark, table, f"{path}/_SUCCESS")
+    if not fs.exists(htable):
+        return None
+    schema = _marker_schemas(spark, fs, hmarker).get(name)
+    return (spark.read.schema(schema) if schema else spark.read).parquet(table)
+
+
+def _marker_schemas(spark: SparkSession, fs, hmarker) -> dict[str, StructType]:
+    """The table schemas a ``write_staged`` commit marker records."""
+    if not fs.exists(hmarker):
+        return {}
+    stream = fs.open(hmarker)
+    try:
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    if not text.strip():
+        return {}
+    return {n: StructType.fromJson(s) for n, s in json.loads(text).items()}
 
 
 def recover_swap(spark: SparkSession, path: str) -> str:

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import datetime as dt
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -11,21 +12,28 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from realtime_banking_cdc_pipeline_spark.session import get_spark  # noqa: E402
 
 
-# Spark keeps at most ``spark.sql.codegen.cache.maxEntries`` (default
-# 100) compiled classes. One streaming-pipeline micro-batch compiles
-# ~230, so with the default a repeat of the same batch recompiled all
-# ~230; with 4000 entries it compiles none. On a 4-core host the
-# repeated two-batch pipeline took 12.8 s instead of 15.0 s.
-_CODEGEN_CACHE_ENTRIES = "4000"
-
-
 @pytest.fixture(scope="session")
 def spark():
-    return get_spark(
-        "tests",
-        shuffle_partitions=8,
-        extra_conf={"spark.sql.codegen.cache.maxEntries": _CODEGEN_CACHE_ENTRIES},
-    )
+    return get_spark("tests", shuffle_partitions=8)
+
+
+@pytest.fixture
+def jobs_run_by(spark):
+    """``jobs_run_by(fn)`` calls ``fn()`` and returns its result with the
+    number of Spark jobs it ran."""
+
+    def run(fn):
+        sc = spark.sparkContext
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(autouse=True)

@@ -45,10 +45,14 @@ def _saved_rows(spark, d):
     return {t: _rows(spark.read.parquet(f"{d}/{t}")) for t in _STATE_TABLES}
 
 
-def _loaded_rows(state):
+def _state_tables(state):
     tables = {"fact_state": state.fact}
     tables.update((f"snapshot_{t}", df) for t, df in state.snapshots.items())
-    return {t: df if df is None else _rows(df) for t, df in tables.items()}
+    return tables
+
+
+def _loaded_rows(state):
+    return {t: df if df is None else _rows(df) for t, df in _state_tables(state).items()}
 
 
 def _two_saves(spark, fixture_frames, first_dir, second_dir=None):
@@ -130,6 +134,37 @@ def test_save_is_all_or_nothing(spark, fixture_frames, tmp_path, monkeypatch):
         state.save(d)
     monkeypatch.undo()
     assert _loaded_rows(MedallionState.load(spark, d)) == want
+
+
+def test_load_reads_the_schemas_its_save_committed(
+    spark, fixture_frames, tmp_path, jobs_run_by
+):
+    """``save`` records each table's schema in the commit marker, so
+    ``load`` resolves the state without an inference job, to the schema
+    and rows an inferring read returns."""
+    from realtime_banking_cdc_pipeline_spark.plans.medallion import MedallionState
+
+    d = str(tmp_path / "state")
+    _two_saves(spark, fixture_frames, d)
+    state, n = jobs_run_by(lambda: MedallionState.load(spark, d))
+    assert n == 0
+    for t, df in _state_tables(state).items():
+        assert df.schema == spark.read.parquet(f"{d}/{t}").schema, t
+    assert _loaded_rows(state) == _saved_rows(spark, d)
+
+
+def test_load_infers_a_state_whose_marker_is_empty(spark, fixture_frames, tmp_path):
+    """A state committed before markers carried schemas (an empty
+    ``_SUCCESS``) still loads, by inferring each table's schema."""
+    import os
+
+    from realtime_banking_cdc_pipeline_spark.plans.medallion import MedallionState
+
+    d = str(tmp_path / "state")
+    _two_saves(spark, fixture_frames, d)
+    assert os.path.getsize(f"{d}/_SUCCESS") > 0
+    open(f"{d}/_SUCCESS", "w").close()
+    assert _loaded_rows(MedallionState.load(spark, d)) == _saved_rows(spark, d)
 
 
 def _drain(q, done, timeout=120):
