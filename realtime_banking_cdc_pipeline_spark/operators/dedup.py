@@ -21,29 +21,30 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def dedup_latest(
     df: DataFrame,
     keys: Sequence[str],
-    order_by: Sequence[str | Column],
+    order_by: Sequence[str],
 ) -> DataFrame:
     """Keep the newest row per key.
 
     ``order_by`` columns are ranked descending in the given priority
     order (first column is the primary recency measure, the rest break
-    ties). Equivalent SQL::
+    ties). The plan is this SQL, written as one ``selectExpr`` (names
+    backtick-quoted, since callers pass their own)::
 
-        SELECT * EXCEPT (rn) FROM (
+        SELECT * EXCEPT (__rn) FROM (
           SELECT *, ROW_NUMBER() OVER (
-            PARTITION BY <keys> ORDER BY <o1> DESC, <o2> DESC, ...) rn
-          FROM t) WHERE rn = 1
+            PARTITION BY <keys> ORDER BY <o1> DESC, <o2> DESC, ...) __rn
+          FROM t) WHERE __rn = 1
     """
-    ordering = [
-        (F.col(c) if isinstance(c, str) else c).desc() for c in order_by
-    ]
-    w = Window.partitionBy(*keys).orderBy(*ordering)
-    out = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-    return out.drop("__rn")
+    part = ", ".join(f"`{k}`" for k in keys)
+    order = ", ".join(f"`{c}` DESC" for c in order_by)
+    return (
+        df.selectExpr("*", f"row_number() OVER (PARTITION BY {part} ORDER BY {order}) AS __rn")
+        .filter("__rn = 1")
+        .drop("__rn")
+    )

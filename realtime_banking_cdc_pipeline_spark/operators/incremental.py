@@ -36,10 +36,11 @@ def incremental_merge(
     (re-applying a batch is idempotent). With no ``order_by`` the batch
     wins every matched key. Null-key rows collapse to one row.
     """
-    merged = batch.withColumn("_src", F.lit(1))
-    if target is not None:
-        merged = target.withColumn("_src", F.lit(0)).unionByName(
-            merged.select(*target.columns, "_src")
+    if target is None:
+        merged = batch.selectExpr("*", "1 AS _src")
+    else:
+        merged = target.selectExpr("*", "0 AS _src").unionByName(
+            batch.selectExpr(*[f"`{c}`" for c in target.columns], "1 AS _src")
         )
     return dedup_latest(merged, [unique_key], [*order_by, "_src"]).drop("_src")
 

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import dedup_latest
@@ -35,13 +35,21 @@ from .dedup import dedup_latest
 SCD2_COLS = ("valid_from", "valid_to", "is_current")
 
 
+def _change_hash(check_cols: Sequence[str]) -> str:
+    """SQL of the null-safe row hash dbt's ``check`` strategy compares."""
+    return "xxhash64({})".format(
+        ", ".join(f"coalesce(CAST(`{c}` AS STRING), chr(0))" for c in check_cols)
+    )
+
+
 def scd2_init(current_rows: DataFrame, as_of_col: str) -> DataFrame:
     """First snapshot run: every row becomes an open version
     (dbt snapshot first invocation ≡ CTAS)."""
-    return (
-        current_rows.withColumn("valid_from", F.col(as_of_col))
-        .withColumn("valid_to", F.lit(None).cast("timestamp"))
-        .withColumn("is_current", F.lit(True))
+    return current_rows.selectExpr(
+        "*",
+        f"`{as_of_col}` AS valid_from",
+        "CAST(NULL AS TIMESTAMP) AS valid_to",
+        "true AS is_current",
     )
 
 
@@ -64,43 +72,32 @@ def scd2_apply(
     dbt's ``check`` strategy row comparison.
     """
     updates = dedup_latest(updates, [key], [as_of_col, *tiebreak_cols])
-    data_cols = [c for c in updates.columns]
-
-    def change_hash(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "__chash",
-            F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in check_cols]),
-        )
-
     if snapshot is None:
         return scd2_init(updates, as_of_col)
 
-    open_v = change_hash(snapshot.filter(F.col("is_current")))
-    closed_v = snapshot.filter(~F.col("is_current"))
-    incoming = change_hash(updates)
+    data_cols = updates.columns
+    chash = f"{_change_hash(check_cols)} AS __chash"
+    open_v = snapshot.filter("is_current").selectExpr("*", chash)
+    closed_v = snapshot.filter("NOT is_current").select(*data_cols, *SCD2_COLS)
+    incoming = updates.selectExpr("*", chash)
+    j = open_v.alias("o").join(incoming.alias("n"), F.expr(f"o.`{key}` = n.`{key}`"), "full_outer")
 
-    j = open_v.alias("o").join(incoming.alias("n"), F.col(f"o.{key}") == F.col(f"n.{key}"), "full_outer")
-
-    changed = F.col(f"o.{key}").isNotNull() & F.col(f"n.{key}").isNotNull() & (
-        F.col("o.__chash") != F.col("n.__chash")
-    )
-    brand_new = F.col(f"o.{key}").isNull()
-
+    changed = f"o.`{key}` IS NOT NULL AND n.`{key}` IS NOT NULL AND o.__chash <> n.__chash"
     # Old versions: closed if the incoming image differs, kept otherwise.
-    old_side = j.filter(F.col(f"o.{key}").isNotNull()).select(
-        *[F.col(f"o.{c}").alias(c) for c in data_cols],
-        F.col("o.valid_from").alias("valid_from"),
-        F.when(changed, F.col(f"n.{as_of_col}")).otherwise(F.col("o.valid_to")).alias("valid_to"),
-        F.when(changed, F.lit(False)).otherwise(F.lit(True)).alias("is_current"),
+    old_side = j.filter(f"o.`{key}` IS NOT NULL").selectExpr(
+        *[f"o.`{c}` AS `{c}`" for c in data_cols],
+        "o.valid_from AS valid_from",
+        f"CASE WHEN {changed} THEN n.`{as_of_col}` ELSE o.valid_to END AS valid_to",
+        f"CASE WHEN {changed} THEN false ELSE true END AS is_current",
     )
     # New versions: changed keys + never-seen keys open a fresh version.
-    new_side = j.filter(changed | brand_new).select(
-        *[F.col(f"n.{c}").alias(c) for c in data_cols],
-        F.col(f"n.{as_of_col}").alias("valid_from"),
-        F.lit(None).cast("timestamp").alias("valid_to"),
-        F.lit(True).alias("is_current"),
+    new_side = j.filter(f"({changed}) OR o.`{key}` IS NULL").selectExpr(
+        *[f"n.`{c}` AS `{c}`" for c in data_cols],
+        f"n.`{as_of_col}` AS valid_from",
+        "CAST(NULL AS TIMESTAMP) AS valid_to",
+        "true AS is_current",
     )
-    return closed_v.select(*data_cols, *SCD2_COLS).unionByName(old_side).unionByName(new_side)
+    return closed_v.unionByName(old_side).unionByName(new_side)
 
 
 def scd2_merge_images(
@@ -139,34 +136,25 @@ def scd2_merge_images(
         # keep the snapshot schema tombstone-free in both cadences
         return first.drop(deleted_col) if deleted_col else first
 
-    data_cols = list(images.columns)
-    open_images = (
-        snapshot.filter(F.col("is_current"))
-        .withColumn(as_of_col, F.col("valid_from"))
-        .select(*[c for c in data_cols if c != deleted_col])
+    data_cols = images.columns
+    out_cols = [f"`{c}`" for c in data_cols if c != deleted_col]
+    # the open versions re-enter as images effective at valid_from; the
+    # snapshot holds live versions only, so they are not deleted
+    reentered = {as_of_col: "valid_from", deleted_col: "false"}
+    open_images = snapshot.filter("is_current").selectExpr(
+        *[f"{reentered[c]} AS `{c}`" if c in reentered else f"`{c}`" for c in data_cols],
+        "0 AS __src",
     )
-    if deleted_col:
-        # snapshot holds live versions only; re-enter them as not-deleted
-        open_images = open_images.withColumn(deleted_col, F.lit(False))
-    open_images = open_images.select(*data_cols).withColumn("__src", F.lit(0))
-    closed_v = snapshot.filter(~F.col("is_current")).select(
-        *[c for c in data_cols if c != deleted_col], *SCD2_COLS
-    )
-    batch = images.select(*data_cols).withColumn("__src", F.lit(1))
+    closed_v = snapshot.filter("NOT is_current").selectExpr(*out_cols, *SCD2_COLS)
     replayed = scd2_from_change_log(
-        open_images.unionByName(batch),
+        open_images.unionByName(images.selectExpr("*", "1 AS __src")),
         key,
         as_of_col,
         ["__src", *tiebreak_cols],
         check_cols,
         deleted_col,
-    ).drop("__src")
-    if deleted_col:
-        replayed = replayed.drop(deleted_col)
-        out_cols = [c for c in data_cols if c != deleted_col]
-    else:
-        out_cols = data_cols
-    return closed_v.unionByName(replayed.select(*out_cols, *SCD2_COLS))
+    )
+    return closed_v.unionByName(replayed.selectExpr(*out_cols, *SCD2_COLS))
 
 
 def scd2_from_change_log(
@@ -191,29 +179,27 @@ def scd2_from_change_log(
     at its timestamp and opens nothing; a later insert re-opens a new
     chain. Delete images never collapse with the identical before-image
     (the deleted flag participates in the change hash).
+
+    The plan is two windowed selects over one window (names
+    backtick-quoted, since callers pass their own)::
+
+        SELECT *, <hash> AS __chash, lag(<hash>) OVER w AS __prev FROM log
+          WHERE __chash IS DISTINCT FROM __prev                  -- collapse
+        SELECT <log cols>, <as_of> AS valid_from,
+               lead(<as_of>) OVER w AS valid_to                  -- close
+    then ``valid_to IS NULL AS is_current``.
     """
-    order = [F.col(as_of_col).asc(), *[F.col(c).asc() for c in tiebreak_cols]]
-    w = Window.partitionBy(key).orderBy(*order)
-    df = log
+    order = ", ".join(f"`{c}`" for c in (as_of_col, *tiebreak_cols))
+    w = f"OVER (PARTITION BY `{key}` ORDER BY {order})"
+    cols = [f"`{c}`" for c in log.columns]
     if check_cols:
-        hash_inputs = [
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in check_cols
-        ]
-        if deleted_col:
-            hash_inputs.append(F.col(deleted_col).cast("string"))
-        df = (
-            df.withColumn("__chash", F.xxhash64(*hash_inputs))
-            .withColumn("__prev", F.lag("__chash").over(w))
-            .filter(F.col("__prev").isNull() | (F.col("__chash") != F.col("__prev")))
-            .drop("__chash", "__prev")
+        h = _change_hash([*check_cols, *([deleted_col] if deleted_col else [])])
+        log = log.selectExpr("*", f"{h} AS __chash", f"lag({h}) {w} AS __prev").filter(
+            "__chash IS DISTINCT FROM __prev"
         )
-    out = (
-        df.withColumn("valid_from", F.col(as_of_col))
-        .withColumn("valid_to", F.lead(as_of_col).over(w))
-        .withColumn("is_current", F.col("valid_to").isNull())
-    )
-    if deleted_col:
-        # the delete image's timestamp has already closed the previous
-        # version via lead(); the tombstone itself is not a version
-        out = out.filter(~F.col(deleted_col))
-    return out
+    out = log.selectExpr(
+        *cols, f"`{as_of_col}` AS valid_from", f"lead(`{as_of_col}`) {w} AS valid_to"
+    ).selectExpr("*", "valid_to IS NULL AS is_current")
+    # the delete image's timestamp has already closed the previous
+    # version via lead(); the tombstone itself is not a version
+    return out.filter(f"NOT `{deleted_col}`") if deleted_col else out

@@ -16,24 +16,25 @@ broadcast (explicit hint, though Catalyst would pick it under the
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.incremental import incremental_merge
 
+# snapshot column -> its dim_*.sql select item
+_DIM_ITEMS = {
+    "valid_from": "valid_from AS effective_from",
+    "valid_to": "valid_to AS effective_to",
+    "is_current": "valid_to IS NULL AS is_current",
+}
+
 
 def build_dim(snapshot: DataFrame) -> DataFrame:
-    """SCD2 snapshot → dim with effective_from/to + is_current (C2/P6)."""
-    out = (
-        snapshot.withColumnRenamed("valid_from", "effective_from")
-        .withColumnRenamed("valid_to", "effective_to")
-        .withColumn(
-            "is_current",
-            F.when(F.col("effective_to").isNull(), F.lit(True)).otherwise(F.lit(False)),
-        )
+    """SCD2 snapshot → dim with effective_from/to + is_current (C2/P6):
+    one select, in snapshot column order. The audit columns (event_ts,
+    lsn) stay internal to the snapshot (dim shape per
+    dim_customers.sql:3-16 / FIXTURES.md §3)."""
+    return snapshot.selectExpr(
+        *[_DIM_ITEMS.get(c, f"`{c}`") for c in snapshot.columns if c not in ("event_ts", "lsn")]
     )
-    # audit columns stay internal to the snapshot (dim shape per
-    # dim_customers.sql:3-16 / FIXTURES.md §3)
-    return out.drop("event_ts", "lsn")
 
 
 def build_fact_transactions(
@@ -55,8 +56,8 @@ def build_fact_transactions(
     columns later batches recency-compare on merge — the durable/state
     copy keeps them, the presented gold view drops them.
     """
-    accts = F.broadcast(accounts_dim.select("account_id", "customer_id"))
-    fact = stg_txns.join(accts, "account_id", "left").select(
+    accts = accounts_dim.select("account_id", "customer_id").hint("broadcast")
+    fact = stg_txns.join(accts, "account_id", "left").selectExpr(
         "transaction_id",
         "account_id",
         "customer_id",
@@ -67,7 +68,7 @@ def build_fact_transactions(
         "transaction_time",
         "ts_ms",
         "lsn",
-        F.current_timestamp().alias("load_timestamp"),
+        "current_timestamp() AS load_timestamp",
     )
     return incremental_merge(
         existing_fact,

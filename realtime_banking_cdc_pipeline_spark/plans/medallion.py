@@ -11,7 +11,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.quality import (
     expect_empty,
@@ -74,9 +73,8 @@ def bronze_from_kafka_frames(
     column (kafka_to_minio.py:55-59's per-topic buffers, declaratively)."""
     out = {}
     for table in TABLE_SCHEMAS:
-        raw = frames.filter(F.col("topic").endswith("." + table))
-        events = parse_envelope(raw, table)
-        out[table] = to_bronze_rows(events, drop_deletes=drop_deletes)
+        raw = frames.filter(f"endswith(topic, '.{table}')")
+        out[table] = to_bronze_rows(parse_envelope(raw, table), drop_deletes=drop_deletes)
     return out
 
 
@@ -134,9 +132,7 @@ def run_gold(
     # SCD2 rows), not this batch's staged accounts: a transaction whose
     # account CDC image arrived in an earlier batch must still resolve
     # customer_id (fact_transactions.sql joins the full staging table).
-    accounts_dim = state.snapshots["accounts"].filter(
-        F.col("valid_to").isNull()
-    )
+    accounts_dim = state.snapshots["accounts"].filter("valid_to IS NULL")
     state.fact = build_fact_transactions(
         silver["transactions"], accounts_dim, existing_fact=state.fact
     )

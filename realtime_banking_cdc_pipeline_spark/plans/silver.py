@@ -1,5 +1,6 @@
 """Silver staging models (dbt staging views re-expressed as DataFrame
-functions; SURVEY.md §3.2).
+functions whose projections are the models' SQL select lists;
+SURVEY.md §3.2).
 
 Each mirrors one reference model: typed projection + rename (P1/P2) +
 dedup-latest (W1). The reference casts warehouse-side ids to *strings*
@@ -14,14 +15,9 @@ parquet scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..operators.dedup import dedup_latest
-
-# Bronze rows carry the wire types from sources/cdc.py: decimals as
-# double, timestamps as epoch-micros longs (Debezium defaults).
-_TS = lambda c: F.timestamp_micros(F.col(c))  # noqa: E731
 
 
 def _deduped(bronze: DataFrame) -> DataFrame:
@@ -31,18 +27,14 @@ def _deduped(bronze: DataFrame) -> DataFrame:
     return dedup_latest(bronze, ["id"], ["created_at", "ts_ms", "lsn"])
 
 
-# CDC event-time audit columns. The reference's staging drops them, but
-# its schema has no updated_at (postgres/schema.sql:4-10): created_at is
-# frozen on UPDATE, so event time is the only usable SCD2 effective time
-# and dedup tiebreak (SURVEY.md §2.5 ordering note). Gold models drop
-# them at the boundary, matching the reference's output shapes.
-_AUDIT = (
-    lambda: (  # noqa: E731
-        F.timestamp_millis(F.col("ts_ms")).alias("event_ts"),
-        F.col("lsn"),
-        F.current_timestamp().alias("load_timestamp"),
-    )
-)
+# Bronze rows carry the wire types from sources/cdc.py: decimals as
+# double, timestamps as epoch-micros longs (Debezium defaults), so
+# created_at goes through timestamp_micros. The CDC event-time audit
+# columns (event_ts, lsn) are not in the reference's staging, but its
+# schema has no updated_at (postgres/schema.sql:4-10): created_at is
+# frozen on UPDATE, so event time is the only usable SCD2 effective
+# time and dedup tiebreak (SURVEY.md §2.5 ordering note). Gold models
+# drop them at the boundary, matching the reference's output shapes.
 
 
 def stg_customers(bronze_customers: DataFrame, latest_only: bool = True) -> DataFrame:
@@ -52,14 +44,16 @@ def stg_customers(bronze_customers: DataFrame, latest_only: bool = True) -> Data
     time) — the input SCD2 snapshots need to build full version chains.
     """
     d = _deduped(bronze_customers) if latest_only else bronze_customers
-    return d.select(
-        F.col("id").cast("string").alias("customer_id"),
-        F.col("first_name"),
-        F.col("last_name"),
-        F.col("email"),
-        _TS("created_at").alias("created_at"),
-        F.col("_deleted"),
-        *_AUDIT(),
+    return d.selectExpr(
+        "CAST(id AS STRING) AS customer_id",
+        "first_name",
+        "last_name",
+        "email",
+        "timestamp_micros(created_at) AS created_at",
+        "_deleted",
+        "timestamp_millis(ts_ms) AS event_ts",
+        "lsn",
+        "current_timestamp() AS load_timestamp",
     )
 
 
@@ -69,18 +63,10 @@ def stg_customers(bronze_customers: DataFrame, latest_only: bool = True) -> Data
 # DecimalType(18,2) end-to-end — exact sums, order-independent — with
 # ``double_compat_view`` reproducing the reference's lossy shape for
 # consumers that expect it. Default stays double for reference parity.
-def _money(col_name: str, decimal: bool) -> Column:
-    target = "decimal(18,2)" if decimal else "double"
-    return F.col(col_name).cast(target).alias(col_name)
-
-
 def double_compat_view(df: DataFrame, money_cols: list[str]) -> DataFrame:
     """The stg_accounts.sql:8 shape: decimal money re-cast to double for
     consumers written against the reference's FLOAT columns."""
-    out = df
-    for c in money_cols:
-        out = out.withColumn(c, F.col(c).cast("double"))
-    return out
+    return df.withColumns({c: df[c].cast("double") for c in money_cols})
 
 
 def stg_accounts(
@@ -88,15 +74,18 @@ def stg_accounts(
 ) -> DataFrame:
     """stg_accounts.sql:5-28."""
     d = _deduped(bronze_accounts) if latest_only else bronze_accounts
-    return d.select(
-        F.col("id").cast("string").alias("account_id"),
-        F.col("customer_id").cast("string").alias("customer_id"),
-        F.col("account_type"),
-        _money("balance", decimal),
-        F.col("currency"),
-        _TS("created_at").alias("created_at"),
-        F.col("_deleted"),
-        *_AUDIT(),
+    money = "DECIMAL(18,2)" if decimal else "DOUBLE"
+    return d.selectExpr(
+        "CAST(id AS STRING) AS account_id",
+        "CAST(customer_id AS STRING) AS customer_id",
+        "account_type",
+        f"CAST(balance AS {money}) AS balance",
+        "currency",
+        "timestamp_micros(created_at) AS created_at",
+        "_deleted",
+        "timestamp_millis(ts_ms) AS event_ts",
+        "lsn",
+        "current_timestamp() AS load_timestamp",
     )
 
 
@@ -106,15 +95,16 @@ def stg_transactions(
     """stg_transactions.sql:4-11 — projection/rename, NO dedup in the
     reference (facts are append-only; duplicates handled by the
     incremental merge's unique_key)."""
-    return bronze_transactions.select(
-        F.col("id").cast("string").alias("transaction_id"),
-        F.col("account_id").cast("string").alias("account_id"),
-        F.col("txn_type").alias("transaction_type"),
-        _money("amount", decimal),
-        F.col("related_account_id").cast("string").alias("related_account_id"),
-        F.col("status"),
-        _TS("created_at").alias("transaction_time"),
-        F.col("ts_ms"),
-        F.col("lsn"),
-        F.current_timestamp().alias("load_timestamp"),
+    money = "DECIMAL(18,2)" if decimal else "DOUBLE"
+    return bronze_transactions.selectExpr(
+        "CAST(id AS STRING) AS transaction_id",
+        "CAST(account_id AS STRING) AS account_id",
+        "txn_type AS transaction_type",
+        f"CAST(amount AS {money}) AS amount",
+        "CAST(related_account_id AS STRING) AS related_account_id",
+        "status",
+        "timestamp_micros(created_at) AS transaction_time",
+        "ts_ms",
+        "lsn",
+        "current_timestamp() AS load_timestamp",
     )

@@ -62,7 +62,6 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
 
 # SCD2 `check` strategy columns per snapshot
 # (banking_dbt/snapshots/customers_snapshot.sql:6-8, accounts_snapshot.sql:6-8)
-SCD2_KEYS: dict[str, str] = {"customers": "id", "accounts": "id"}
 SCD2_CHECK_COLS: dict[str, list[str]] = {
     "customers": ["first_name", "last_name", "email"],
     "accounts": ["customer_id", "account_type", "balance"],

@@ -11,6 +11,7 @@ corrupt-record quarantine column.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import weakref
@@ -105,10 +106,24 @@ def compact_parquet(
     return files
 
 
+# py4j gateway -> {JVM class name: class}
+_classes: "weakref.WeakKeyDictionary[object, dict]" = weakref.WeakKeyDictionary()
+
+
+def _jclass(spark: SparkSession, name: str):
+    """The JVM class ``name``, resolved once per py4j gateway:
+    ``spark._jvm.org.apache.hadoop.fs.Path`` costs one round trip per
+    package segment each time it is spelled out."""
+    classes = _classes.setdefault(spark.sparkContext._gateway, {})
+    if name not in classes:
+        classes[name] = functools.reduce(getattr, name.split("."), spark._jvm)
+    return classes[name]
+
+
 def _fs(spark: SparkSession, path: str, *more: str):
     """The Hadoop FileSystem of ``path``, then the Hadoop Paths of
     ``path`` and each of ``more``."""
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    Path = _jclass(spark, "org.apache.hadoop.fs.Path")
     hpaths = [Path(p) for p in (path, *more)]
     return (hpaths[0].getFileSystem(spark._jsc.hadoopConfiguration()), *hpaths)
 
@@ -129,14 +144,14 @@ def write_staged(path: str, tables: dict[str, DataFrame]) -> None:
         return
     spark = next(iter(tables.values())).sparkSession
     staging = path.rstrip("/") + "__staging"
-    fs, hstaging, hmarker = _fs(spark, staging, staging + "/_SUCCESS")
+    fs, hstaging, hmarker, hpath = _fs(spark, staging, staging + "/_SUCCESS", path)
     fs.delete(hstaging, True)  # the uncommitted leftover of a crashed write
     for name, df in tables.items():
         df.write.mode("overwrite").parquet(f"{staging}/{name}" if name else staging)
     marker = fs.create(hmarker, True)
     marker.write(json.dumps({n: df.schema.jsonValue() for n, df in tables.items()}).encode())
     marker.close()
-    recover_swap(spark, path)  # promote the committed set
+    _recover(fs, hpath, hstaging, hmarker)  # promote the committed set
 
 
 def read_staged(spark: SparkSession, path: str, name: str = "") -> DataFrame | None:
@@ -146,9 +161,12 @@ def read_staged(spark: SparkSession, path: str, name: str = "") -> DataFrame | N
     the read runs no inference job; a table the marker does not describe
     (an empty marker, as states committed before markers held schemas
     have) is inferred from its files."""
-    recover_swap(spark, path)
+    staging = path.rstrip("/") + "__staging"
     table = f"{path}/{name}" if name else path
-    fs, htable, hmarker = _fs(spark, table, f"{path}/_SUCCESS")
+    fs, hpath, hstaging, hstaged, htable, hmarker = _fs(
+        spark, path, staging, staging + "/_SUCCESS", table, f"{path}/_SUCCESS"
+    )
+    _recover(fs, hpath, hstaging, hstaged)
     if not fs.exists(htable):
         return None
     schema = _marker_schemas(spark, fs, hmarker).get(name)
@@ -161,7 +179,7 @@ def _marker_schemas(spark: SparkSession, fs, hmarker) -> dict[str, StructType]:
         return {}
     stream = fs.open(hmarker)
     try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        text = _jclass(spark, "org.apache.commons.io.IOUtils").toString(stream, "UTF-8")
     finally:
         stream.close()
     if not text.strip():
@@ -177,11 +195,16 @@ def recover_swap(spark: SparkSession, path: str) -> str:
     the result is ``"intact"`` (``path`` present) or ``"missing"``.
     Idempotent — safe to call at every job start."""
     staging = path.rstrip("/") + "__staging"
-    fs, hpath, hstaging, hmarker = _fs(spark, path, staging, staging + "/_SUCCESS")
+    return _recover(*_fs(spark, path, staging, staging + "/_SUCCESS"))
+
+
+def _recover(fs, hpath, hstaging, hmarker) -> str:
+    """``recover_swap`` on resolved Hadoop paths: ``path``, its staging
+    dir and the staging dir's ``_SUCCESS`` marker."""
     if fs.exists(hmarker):
         fs.delete(hpath, True)
         if not fs.rename(hstaging, hpath):
-            raise IOError(f"could not promote {staging} to {path}")
+            raise IOError(f"could not promote {hstaging.toString()} to {hpath.toString()}")
         return "promoted_staging"
     fs.delete(hstaging, True)
     return "intact" if fs.exists(hpath) else "missing"

@@ -75,12 +75,20 @@ def main() -> int:
     from realtime_banking_cdc_pipeline_spark.caching import release_caches
 
     for name in names:
-        sdf = qs[name](spark, sf_dir).toPandas()
-        release_caches()  # operator-persisted frames don't leak across queries
-        if name not in oracles:
-            print(f"  {name}: rows-only {len(sdf)}")
+        # one query's failure (e.g. its DuckDB oracle running out of
+        # memory) is counted, and the sweep goes on to the next query
+        try:
+            sdf = qs[name](spark, sf_dir).toPandas()
+            if name not in oracles:
+                print(f"  {name}: rows-only {len(sdf)}")
+                continue
+            ddf = con.execute(oracles[name]).df()
+        except Exception as e:
+            print(f"  ERROR {name}: {e}")
+            fails.append(name)
             continue
-        ddf = con.execute(oracles[name]).df()
+        finally:
+            release_caches()  # operator-persisted frames don't leak across queries
         ok = len(sdf) == len(ddf) and vhash(sdf) == vhash(ddf)
         print(f"  {name}: {'HASH-OK' if ok else 'HASH-FAIL'} rows={len(sdf)}")
         if not ok:
