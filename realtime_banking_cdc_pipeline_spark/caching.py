@@ -28,6 +28,10 @@ from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
 _TRACKED_RDDS: list = []  # (SparkContext, rdd_id) pairs from localCheckpoints
+# ``_TRACKED_RDDS`` length at which ``track_local_checkpoint`` next
+# drops the entries Spark no longer persists (doubling: amortized O(1))
+_PRUNE_FLOOR = 16
+_prune_at = _PRUNE_FLOOR
 
 
 def track_persist(df: DataFrame) -> DataFrame:
@@ -55,8 +59,25 @@ def track_local_checkpoint(df: DataFrame) -> DataFrame:
     recomputed (lineage is gone) — releasing must happen BETWEEN
     queries, after results are consumed, which is already the
     ``release_caches`` contract.
+
+    A host that never calls ``release_caches`` (a stream checkpointing
+    its Medallion state every batch) still keeps the registry bounded:
+    Spark's ContextCleaner unpersists a checkpoint once no frame reads
+    it, and each time the registry doubles, the ids Spark no longer
+    persists are dropped from it.
     """
+    global _prune_at
+    if len(_TRACKED_RDDS) >= _prune_at:
+        _TRACKED_RDDS[:] = [(sc, rid) for sc, rid in _TRACKED_RDDS if _persisted(sc, rid)]
+        _prune_at = max(_PRUNE_FLOOR, 2 * len(_TRACKED_RDDS))
     return _checkpoint_and_record(df, _TRACKED_RDDS)
+
+
+def _persisted(sc, rid: int) -> bool:
+    try:
+        return bool(sc._jsc.getPersistentRDDs().containsKey(rid))
+    except Exception:  # session stopped: nothing left to release
+        return False
 
 
 def _checkpoint_and_record(df: DataFrame, sink: list) -> DataFrame:
@@ -161,6 +182,8 @@ def release_caches() -> int:
     queries on the one thread that built them; work that runs
     concurrently with query builds (an overlapping stream) must use its
     own ``CheckpointScope`` instead of this global registry."""
+    global _prune_at
+    _prune_at = _PRUNE_FLOOR
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()

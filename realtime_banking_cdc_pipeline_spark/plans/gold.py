@@ -55,6 +55,11 @@ def build_fact_transactions(
     transaction_time, load_timestamp, plus the (ts_ms, lsn) audit
     columns later batches recency-compare on merge — the durable/state
     copy keeps them, the presented gold view drops them.
+
+    A delete image (``_deleted``, delete-propagating mode) is the newest
+    image of its key, so it wins the merge and then removes the row.
+    The fact keeps no tombstone: a stale image of the key redelivered
+    in a later batch inserts it again.
     """
     accts = accounts_dim.select("account_id", "customer_id").hint("broadcast")
     fact = stg_txns.join(accts, "account_id", "left").selectExpr(
@@ -69,10 +74,13 @@ def build_fact_transactions(
         "ts_ms",
         "lsn",
         "current_timestamp() AS load_timestamp",
+        "_deleted",
     )
+    if existing_fact is not None:
+        existing_fact = existing_fact.selectExpr("*", "false AS _deleted")
     return incremental_merge(
         existing_fact,
         fact,
         unique_key="transaction_id",
         order_by=["transaction_time", "ts_ms", "lsn"],
-    )
+    ).filter("NOT _deleted").drop("_deleted")

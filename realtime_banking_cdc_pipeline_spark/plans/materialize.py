@@ -24,5 +24,5 @@ def materialize_incremental(
     target is rewritten by a staged commit, so a crash mid-write
     leaves the old or the new table, never an empty one. Returns
     nothing: read ``path`` back to query the table."""
-    merged = incremental_merge(read_staged(spark, path), batch, unique_key)
+    merged = incremental_merge(read_staged(spark, path)[""], batch, unique_key)
     write_staged(path, {"": merged})

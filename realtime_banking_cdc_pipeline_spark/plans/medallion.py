@@ -12,6 +12,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..caching import track_local_checkpoint
 from ..operators.quality import (
     expect_empty,
     orphan_rows,
@@ -36,7 +37,12 @@ class MedallionState:
     rebuilding from ``empty()`` silently drops all pre-restart dim
     versions. The three tables are committed together
     (``write_staged``), so a crash mid-save loads the previous batch's
-    state whole, never a mix of two batches."""
+    state whole, never a mix of two batches.
+
+    After a ``run_pipeline`` every table is a local checkpoint taken
+    where its layer built it (``run_snapshots``, ``run_gold``): ``save``
+    writes the checkpointed rows, re-runs no merge and no longer reads
+    the paths it overwrites."""
 
     snapshots: dict[str, DataFrame | None]
     fact: DataFrame | None
@@ -46,8 +52,9 @@ class MedallionState:
         return cls(snapshots={"customers": None, "accounts": None}, fact=None)
 
     def save(self, base_dir: str) -> None:
-        """Persist fact + snapshots as one staged commit (the loaded
-        DataFrames' lineage reads these same paths)."""
+        """Persist fact + snapshots as one staged commit (a state saved
+        straight after ``load`` still reads these same paths, which the
+        staging dir keeps safe)."""
         tables = {"fact_state": self.fact}
         tables.update((f"snapshot_{t}", snap) for t, snap in self.snapshots.items())
         write_staged(base_dir, {n: df for n, df in tables.items() if df is not None})
@@ -57,11 +64,13 @@ class MedallionState:
         """Read back what ``save`` committed; an interrupted save is
         finished or dropped first (``read_staged``), so a crash mid-save
         never reads as a first run."""
-        state = cls.empty()
-        for table in state.snapshots:
-            state.snapshots[table] = read_staged(spark, base_dir, f"snapshot_{table}")
-        state.fact = read_staged(spark, base_dir, "fact_state")
-        return state
+        tables = read_staged(
+            spark, base_dir, "fact_state", "snapshot_customers", "snapshot_accounts"
+        )
+        return cls(
+            snapshots={t: tables[f"snapshot_{t}"] for t in ("customers", "accounts")},
+            fact=tables["fact_state"],
+        )
 
 
 def bronze_from_kafka_frames(
@@ -103,10 +112,14 @@ def run_snapshots(
     batch opens/closes a version (the reference's daily snapshot cadence
     silently drops intra-day versions — SURVEY.md §7 phase-2 risk).
     Effective time is the CDC event time (``event_ts``; ``created_at``
-    is frozen on UPDATE in this schema), lsn breaks equal-ms ties."""
+    is frozen on UPDATE in this schema), lsn breaks equal-ms ties.
+
+    Each merged snapshot is materialized here, once per batch (a local
+    checkpoint, like a dbt snapshot table): Gold, ``save`` and the
+    quality suite scan it instead of re-running Bronze→Silver→merge."""
     key_cols = {"customers": "customer_id", "accounts": "account_id"}
     for table in ("customers", "accounts"):
-        state.snapshots[table] = scd2_merge_images(
+        merged = scd2_merge_images(
             state.snapshots[table],
             silver[f"{table}_images"].drop("load_timestamp"),
             key=key_cols[table],
@@ -118,12 +131,16 @@ def run_snapshots(
             # this is a no-op) — the reference's known gap, SURVEY §2.1
             deleted_col="_deleted",
         )
+        state.snapshots[table] = track_local_checkpoint(merged)
     return state
 
 
 def run_gold(
     state: MedallionState, silver: dict[str, DataFrame]
 ) -> dict[str, DataFrame]:
+    """Dims and fact from the checkpointed snapshots; the merged state
+    fact is checkpointed once, and the presented fact, the sink,
+    ``save`` and the quality suite read that checkpoint."""
     dims = {
         "dim_customers": build_dim(state.snapshots["customers"]),
         "dim_accounts": build_dim(state.snapshots["accounts"]),
@@ -133,8 +150,8 @@ def run_gold(
     # account CDC image arrived in an earlier batch must still resolve
     # customer_id (fact_transactions.sql joins the full staging table).
     accounts_dim = state.snapshots["accounts"].filter("valid_to IS NULL")
-    state.fact = build_fact_transactions(
-        silver["transactions"], accounts_dim, existing_fact=state.fact
+    state.fact = track_local_checkpoint(
+        build_fact_transactions(silver["transactions"], accounts_dim, existing_fact=state.fact)
     )
     # presented fact drops the (ts_ms, lsn) audit cols; the state copy
     # keeps them so later batches can recency-compare on merge

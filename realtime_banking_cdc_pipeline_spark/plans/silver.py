@@ -94,7 +94,8 @@ def stg_transactions(
 ) -> DataFrame:
     """stg_transactions.sql:4-11 — projection/rename, NO dedup in the
     reference (facts are append-only; duplicates handled by the
-    incremental merge's unique_key)."""
+    incremental merge's unique_key). ``_deleted`` rides along so the
+    fact merge can propagate a delete (always false in compat mode)."""
     money = "DECIMAL(18,2)" if decimal else "DOUBLE"
     return bronze_transactions.selectExpr(
         "CAST(id AS STRING) AS transaction_id",
@@ -104,6 +105,7 @@ def stg_transactions(
         "CAST(related_account_id AS STRING) AS related_account_id",
         "status",
         "timestamp_micros(created_at) AS transaction_time",
+        "_deleted",
         "ts_ms",
         "lsn",
         "current_timestamp() AS load_timestamp",

@@ -99,7 +99,7 @@ def compact_parquet(
     because the read and the rewrite share ``path``. Returns the
     resulting file count. On Delta/Iceberg this is OPTIMIZE; here it is
     the same operation on plain parquet."""
-    df = read_staged(spark, path)
+    df = read_staged(spark, path)[""]
     n = df.count()
     files = max(1, -(-n // target_records_per_file))
     write_staged(path, {"": df.repartition(files)})
@@ -154,23 +154,32 @@ def write_staged(path: str, tables: dict[str, DataFrame]) -> None:
     _recover(fs, hpath, hstaging, hmarker)  # promote the committed set
 
 
-def read_staged(spark: SparkSession, path: str, name: str = "") -> DataFrame | None:
+def read_staged(spark: SparkSession, path: str, *names: str) -> dict[str, DataFrame | None]:
     """The read side of ``write_staged``: finish or drop an interrupted
-    write first, then read table ``name`` of ``path``; None when that
-    table was never written. The schema comes from the commit marker, so
-    the read runs no inference job; a table the marker does not describe
-    (an empty marker, as states committed before markers held schemas
-    have) is inferred from its files."""
+    write first, then read each table of ``names`` (none: the flat
+    table ``path`` itself, under the name ``""``) from the committed
+    set, None for a table never written. One repair and one marker read
+    serve every table. A table the marker records is read with the
+    schema it records, so the read runs no inference job; one it does
+    not describe (an empty marker, as states committed before markers
+    held schemas have) is inferred from its files, if it exists."""
     staging = path.rstrip("/") + "__staging"
-    table = f"{path}/{name}" if name else path
-    fs, hpath, hstaging, hstaged, htable, hmarker = _fs(
-        spark, path, staging, staging + "/_SUCCESS", table, f"{path}/_SUCCESS"
+    fs, hpath, hstaging, hstaged, hmarker = _fs(
+        spark, path, staging, staging + "/_SUCCESS", f"{path}/_SUCCESS"
     )
     _recover(fs, hpath, hstaging, hstaged)
-    if not fs.exists(htable):
-        return None
-    schema = _marker_schemas(spark, fs, hmarker).get(name)
-    return (spark.read.schema(schema) if schema else spark.read).parquet(table)
+    schemas = _marker_schemas(spark, fs, hmarker)
+    Path = _jclass(spark, "org.apache.hadoop.fs.Path")
+    out = {}
+    for name in names or ("",):
+        table = f"{path}/{name}" if name else path
+        if name in schemas:
+            out[name] = spark.read.schema(schemas[name]).parquet(table)
+        elif fs.exists(Path(table)):
+            out[name] = spark.read.parquet(table)
+        else:
+            out[name] = None
+    return out
 
 
 def _marker_schemas(spark: SparkSession, fs, hmarker) -> dict[str, StructType]:

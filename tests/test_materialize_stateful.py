@@ -153,6 +153,32 @@ def test_load_reads_the_schemas_its_save_committed(
     assert _loaded_rows(state) == _saved_rows(spark, d)
 
 
+def test_load_repairs_and_reads_the_marker_once(spark, fixture_frames, tmp_path, monkeypatch):
+    """``load`` reads its three tables through one staged-commit repair
+    and one read of the commit marker."""
+    from realtime_banking_cdc_pipeline_spark.plans.medallion import MedallionState
+    from realtime_banking_cdc_pipeline_spark.sources import parquet_io
+
+    d = str(tmp_path / "state")
+    _two_saves(spark, fixture_frames, d)
+    calls = []
+
+    def counted(name):
+        fn = getattr(parquet_io, name)
+
+        def call(*args):
+            calls.append(name)
+            return fn(*args)
+
+        return call
+
+    for name in ("_recover", "_marker_schemas"):
+        monkeypatch.setattr(parquet_io, name, counted(name))
+    state = MedallionState.load(spark, d)
+    assert sorted(calls) == ["_marker_schemas", "_recover"]
+    assert _loaded_rows(state) == _saved_rows(spark, d)
+
+
 def test_load_infers_a_state_whose_marker_is_empty(spark, fixture_frames, tmp_path):
     """A state committed before markers carried schemas (an empty
     ``_SUCCESS``) still loads, by inferring each table's schema."""
@@ -405,7 +431,7 @@ def test_swap_recovery_from_every_interrupted_state(spark, tmp_path):
     # committed set replaces the whole old set
     staged(20)
     assert recover_swap(spark, p) == "promoted_staging"
-    assert count("a") == 20 and read_staged(spark, p, "b") is None
+    assert count("a") == 20 and read_staged(spark, p, "b")["b"] is None
 
     # committed staging, path half-deleted, then gone
     staged(30)
@@ -425,7 +451,7 @@ def test_swap_recovery_from_every_interrupted_state(spark, tmp_path):
     # nothing anywhere; saving nothing writes nothing
     shutil.rmtree(p)
     assert recover_swap(spark, p) == "missing"
-    assert read_staged(spark, p) is None
+    assert read_staged(spark, p)[""] is None
     write_staged(p, {})
     MedallionState.empty().save(p)
     assert not os.path.exists(p) and not os.path.exists(staging)

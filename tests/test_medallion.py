@@ -168,14 +168,45 @@ def test_incremental_second_batch(spark, banking_fixture, fixture_frames):
 
 def test_delete_propagation_full_mode(spark, banking_fixture, fixture_frames):
     """drop_deletes=False: a CDC tombstone closes the customer's open
-    SCD2 version at the delete event time and leaves no current row —
-    the capability the reference's consumer silently lacks
-    (kafka_to_minio.py:69)."""
+    SCD2 version at the delete event time and leaves no current row,
+    and removes a deleted transaction from the fact — the capability
+    the reference's consumer silently lacks (kafka_to_minio.py:69)."""
     import datetime as dt
 
-    from realtime_banking_cdc_pipeline_spark.sources.fixtures import BASE_MS
+    from realtime_banking_cdc_pipeline_spark.schemas import KAFKA_FIXTURE_SCHEMA
+    from realtime_banking_cdc_pipeline_spark.sources.fixtures import (
+        BASE_MS,
+        TOPIC_PREFIX,
+        _envelope,
+    )
 
-    _, gold = run_pipeline(spark, fixture_frames, drop_deletes=False)
+    # a transaction created and then deleted (ids past the fixture's)
+    txn = {
+        "id": 9001, "account_id": 10, "txn_type": "DEPOSIT", "amount": 7.5,
+        "related_account_id": None, "status": "COMPLETED", "created_at": BASE_MS * 1000,
+    }
+
+    def txn_frame(before, after, op, ms, lsn):
+        value = _envelope("transactions", before, after, op, ms, lsn)
+        row = (f"{TOPIC_PREFIX}.transactions", '{"id": 9001}', value, dt.datetime(2024, 1, 1))
+        return spark.createDataFrame([row], schema=KAFKA_FIXTURE_SCHEMA)
+
+    create = txn_frame(None, txn, "c", BASE_MS, 90001)
+    delete = txn_frame(txn, None, "d", BASE_MS + 5, 90002)
+
+    def txn_ids(gold):
+        return {r["transaction_id"] for r in gold["fact_transactions"].collect()}
+
+    state, gold = run_pipeline(spark, fixture_frames.union(create).union(delete), drop_deletes=False)
+    assert txn_ids(gold) == {str(k) for k in banking_fixture.expected_current["transactions"]}
+    # the delete arriving a batch after its create removes the fact row too
+    state, _ = run_pipeline(spark, create, state=state, drop_deletes=False)
+    _, later = run_pipeline(spark, delete, state=state, drop_deletes=False)
+    assert "9001" not in txn_ids(later)
+    # compat mode drops the delete envelope: the transaction stays
+    _, compat = run_pipeline(spark, fixture_frames.union(create).union(delete))
+    assert "9001" in txn_ids(compat)
+
     dim = gold["dim_customers"]
 
     deleted_cids = [
@@ -233,14 +264,15 @@ def test_decimal_money_mode(spark, banking_fixture, fixture_frames):
 
 
 def test_warm_batch_plans_within_round_trip_budget(spark, fixture_frames, monkeypatch):
-    """Building one warm batch's plan (``run_pipeline`` on the state of
-    a previous batch; no Spark job runs) stays within a budget of py4j
-    round trips. ``F.col("x").alias("y")`` costs 24 round trips against
-    8 for a 3-column ``selectExpr``, so the layers are written as SQL
-    select lists. Measured on this fixture:
-    4,016 round trips when the layers were Column trees, 541 as SQL
-    strings. Only this thread's calls count: py4j's finalizer thread
-    releases JVM objects on its own schedule."""
+    """One warm batch (``run_pipeline`` on the state of a previous
+    batch: its plans, plus the three checkpoint jobs it runs, each one
+    call) stays within a budget of py4j round trips.
+    ``F.col("x").alias("y")`` costs 24 round trips against 8 for a
+    3-column ``selectExpr``, so the layers are written as SQL select
+    lists. Measured on this fixture: 4,016 round trips when the layers
+    were Column trees, 541 as SQL strings, 573 with the checkpoints.
+    Only this thread's calls count: py4j's finalizer thread releases
+    JVM objects on its own schedule."""
     import threading
 
     import py4j.java_gateway
@@ -259,6 +291,87 @@ def test_warm_batch_plans_within_round_trip_budget(spark, fixture_frames, monkey
     run_pipeline(spark, fixture_frames, state=state)
     monkeypatch.undo()
     assert len(calls) <= 1500, len(calls)
+
+
+def _halves(frames):
+    """The fixture split on the envelope's lsn: two batches of one log."""
+    lsn = F.get_json_object("value", "$.payload.source.lsn").cast("long")
+    half = frames.count() // 2
+    return frames.filter(lsn <= half), frames.filter(lsn > half)
+
+
+def test_backfill_materializes_each_state_table_once(spark, fixture_frames, tmp_path, jobs_run_by):
+    """The merged snapshots and the state fact are checkpointed where
+    they are built, so ``save`` and the quality suite scan them and
+    re-run no Bronze→Silver→merge: 7 jobs to build, 3 to save (one
+    write a table) and 11 for the six checks, on this fixture (the
+    lazy chain ran 0, 8 and 21)."""
+    (state, gold), built = jobs_run_by(
+        lambda: run_pipeline(spark, fixture_frames, drop_deletes=False)
+    )
+    _, saved = jobs_run_by(lambda: state.save(str(tmp_path / "state")))
+    _, checked = jobs_run_by(lambda: run_quality_suite(gold))
+    assert (built, saved, checked) == (7, 3, 11)
+
+
+def test_stream_batch_materializes_each_state_table_once(
+    spark, fixture_frames, tmp_path, jobs_run_by
+):
+    """A stream batch as perfbench drives it: ``run_pipeline`` on the
+    loaded state, the fact sink, ``save``, ``load``. The sink and
+    ``save`` read the checkpoints instead of each re-running the
+    accounts merge and the fact merge (on this fixture: 7, 2, 3 and 0
+    jobs; the lazy chain ran 0, 5, 8 and 0)."""
+    from realtime_banking_cdc_pipeline_spark.plans.materialize import materialize_incremental
+    from realtime_banking_cdc_pipeline_spark.plans.medallion import MedallionState
+
+    first, second = _halves(fixture_frames)
+    state_dir, fact_dir = str(tmp_path / "state"), str(tmp_path / "fact")
+    state, gold = run_pipeline(spark, first)
+    materialize_incremental(spark, gold["fact_transactions"], fact_dir, unique_key="transaction_id")
+    state.save(state_dir)
+    state = MedallionState.load(spark, state_dir)
+
+    (state, gold), built = jobs_run_by(lambda: run_pipeline(spark, second, state=state))
+    _, sunk = jobs_run_by(
+        lambda: materialize_incremental(
+            spark, gold["fact_transactions"], fact_dir, unique_key="transaction_id"
+        )
+    )
+    _, saved = jobs_run_by(lambda: state.save(state_dir))
+    _, loaded = jobs_run_by(lambda: MedallionState.load(spark, state_dir))
+    assert (built, sunk, saved, loaded) == (7, 2, 3, 0)
+
+
+def test_checkpointed_gold_outlives_later_runs_until_release(spark, fixture_frames):
+    """The checkpoints live as long as a frame reads them: a Gold dict
+    held across two later runs, and across a replay into the same
+    in-memory state, still reads the rows it read first. Until
+    ``release_caches`` the checkpoints are live; it frees every one the
+    runs took."""
+    import gc
+
+    from realtime_banking_cdc_pipeline_spark.caching import release_caches
+
+    release_caches()
+    jsc = spark.sparkContext._jsc
+    base = set(jsc.getPersistentRDDs().keySet())
+    first, second = _halves(fixture_frames)
+
+    def rows(gold):
+        return {name: sorted(map(tuple, df.collect())) for name, df in gold.items()}
+
+    state, gold = run_pipeline(spark, first)
+    want = rows(gold)
+    state, _ = run_pipeline(spark, second, state=state)
+    run_pipeline(spark, second, state=state)  # a replay into the same state
+    run_pipeline(spark, fixture_frames)
+    gc.collect()
+    spark._jvm.System.gc()  # let the ContextCleaner see what is unreachable
+    assert rows(gold) == want
+    assert set(jsc.getPersistentRDDs().keySet()) - base  # the checkpoints they read
+    release_caches()
+    assert set(jsc.getPersistentRDDs().keySet()) <= base
 
 
 def test_pipeline_at_10x_fixture_scale(spark):
